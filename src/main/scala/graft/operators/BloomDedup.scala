@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Encoders
@@ -275,9 +275,15 @@ LEFT JOIN seen_texts st USING (text)
 ORDER BY d.doc_id
 """
 
-  // ---- persistence: the filter as a catalog table ----------------------
+  // ---- persistence: the filter as a ModelStore generation ---------------
 
-  def filterTable(tag: String): String = s"${tag}_bloom"
+  /** [[ModelStore]] name of the filter persisted under `tag`. */
+  def storeName(tag: String): String = s"${tag}_bloom"
+
+  /** The filter's part in a [[ModelStore]] generation. */
+  private val Part = "filter"
+  private val PartSchema = new org.apache.spark.sql.types.StructType()
+    .add("kind", "string").add("idx", "int").add("num", "long").add("bytes", "binary")
 
   /** Longs per persisted chunk — 8192 longs = 64 KiB of bits per row, so
     * a 16 MiB (m=2^27) filter is ~256 rows. The row-per-word layout this
@@ -287,78 +293,78 @@ ORDER BY d.doc_id
     * bloomgate tier), for what is physically a 16 MiB read/write. */
   private val ChunkLongs = 8192
 
-  /** Persist a filter: the bit words land as chunked BINARY rows of ONE
-    * `saveAsTable` together with the geometry (kind ∈ {chunk, m, k}) — a
-    * filter can never exist without its geometry (the torn-model
-    * discipline of [[QualityClassifier.persist]]). Writers serialize on
-    * the index lease. */
+  /** Persist a filter as a new [[ModelStore]] generation: the bit words
+    * land as chunked BINARY rows of ONE part together with the geometry
+    * (kind ∈ {chunk, m, k}) — a filter can never exist without its
+    * geometry (the torn-model discipline of [[QualityClassifier.stage]]). */
   def persist(spark: SparkSession, tag: String, filter: Array[Long],
-              m: Int, k: Int): Unit =
-    LeaseLock.withTableLock(spark, tag) {
-      import spark.implicits._
-      // fresh-catalog/stale-warehouse reconciliation — marker-gated, see
-      // [[WarehouseTables]] for the mechanism and its assumption boundary
-      val t = filterTable(tag)
-      WarehouseTables.writeManaged(spark, t)({
-        val chunks = filter.grouped(ChunkLongs).zipWithIndex.map { case (ws, i) =>
-          val bb = java.nio.ByteBuffer.allocate(ws.length * 8)
-          bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          ws.foreach(bb.putLong)
-          ("chunk", i, 0L, bb.array())
-        }.toSeq
-        val meta = Seq(("m", -1, m.toLong, Array.empty[Byte]),
-          ("k", -1, k.toLong, Array.empty[Byte]))
-        (chunks ++ meta).toDF("kind", "idx", "num", "bytes")
-      })(_.write.mode("overwrite").saveAsTable(t))
-    }
-
-  /** Load a persisted filter: (words, m, k). Loud on torn state. */
-  def load(spark: SparkSession, tag: String): (Array[Long], Int, Int) = {
-    val t = spark.table(filterTable(tag))
-    def meta(kind: String): Long = {
-      val rows = t.filter(col("kind") === kind).select("num").collect()
-      require(rows.length == 1,
-        s"${filterTable(tag)}: expected exactly one $kind row, found ${rows.length}")
-      rows(0).getLong(0)
-    }
-    val m = meta("m").toInt
-    val k = meta("k").toInt
-    val nWords = (m + 63) >>> 6
-    val chunks = t.filter(col("kind") === "chunk")
-      .select("idx", "bytes").collect()
-    val nChunks = (nWords + ChunkLongs - 1) / ChunkLongs
-    // the idx SET must be exactly 0..n-1 — a count-only check would let a
-    // duplicated idx plus a missing one load a silently zeroed region
-    // (false negatives), the opposite of "loud on torn state"
-    require(chunks.map(_.getInt(0)).toSet == (0 until nChunks).toSet,
-      s"${filterTable(tag)}: chunk idx set is not 0..${nChunks - 1} for m=$m — torn filter table")
-    val arr = new Array[Long](nWords)
-    chunks.foreach { r =>
-      val base = r.getInt(0) * ChunkLongs
-      val bb = java.nio.ByteBuffer.wrap(r.getAs[Array[Byte]](1))
+              m: Int, k: Int): Unit = {
+    import spark.implicits._
+    val chunks = filter.grouped(ChunkLongs).zipWithIndex.map { case (ws, i) =>
+      val bb = java.nio.ByteBuffer.allocate(ws.length * 8)
       bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      var i = base
-      while (bb.remaining() >= 8) { arr(i) = bb.getLong; i += 1 }
-    }
-    (arr, m, k)
+      ws.foreach(bb.putLong)
+      ("chunk", i, 0L, bb.array())
+    }.toSeq
+    val meta = Seq(("m", -1, m.toLong, Array.empty[Byte]),
+      ("k", -1, k.toLong, Array.empty[Byte]))
+    ModelStore.publish(spark, storeName(tag))(
+      ModelStore.write(_, Part, (chunks ++ meta).toDF("kind", "idx", "num", "bytes")))
   }
 
-  /** Load only the geometry of a persisted filter — no chunk collect. */
-  def loadGeometry(spark: SparkSession, tag: String): (Int, Int) = {
-    val t = spark.table(filterTable(tag))
-    def meta(kind: String): Long = {
-      val rows = t.filter(col("kind") === kind).select("num").collect()
-      require(rows.length == 1,
-        s"${filterTable(tag)}: expected exactly one $kind row, found ${rows.length}")
-      rows(0).getLong(0)
+  /** The geometry (m, k) among `g`'s collected `rows`. Loud on torn
+    * state. */
+  private def geometryIn(g: ModelStore.Generation, rows: Array[Row]): (Int, Int) = {
+    def one(kind: String): Long = {
+      val r = rows.filter(_.getString(0) == kind)
+      require(r.length == 1,
+        s"${g.partPath(Part)}: expected exactly one $kind row, found ${r.length}")
+      r(0).getLong(2)
     }
-    (meta("m").toInt, meta("k").toInt)
+    (one("m").toInt, one("k").toInt)
   }
 
-  /** The persisted filter as a (word_idx, bits) relation, derived on the
-    * fly from the chunked storage — the distributed view of the bit
-    * array for [[gateRelational]]. */
-  def wordsRelation(spark: SparkSession, tag: String): DataFrame = {
+  private def geometryOf(spark: SparkSession, g: ModelStore.Generation): (Int, Int) =
+    geometryIn(g, g.read(spark, Part, PartSchema).filter(col("kind") =!= "chunk").collect())
+
+  /** Load the newest persisted filter: (words, m, k), cached per
+    * generation. Loud on torn state. The returned array is shared with
+    * the cache — read it, never write it ([[absorb]] ORs into a copy). */
+  def load(spark: SparkSession, tag: String): (Array[Long], Int, Int) =
+    ModelStore.load(spark, storeName(tag), "words") { g =>
+      val rows = g.read(spark, Part, PartSchema).collect()
+      val (m, k) = geometryIn(g, rows)
+      val nWords = (m + 63) >>> 6
+      val chunks = rows.filter(_.getString(0) == "chunk")
+      val nChunks = (nWords + ChunkLongs - 1) / ChunkLongs
+      // the idx SET must be exactly 0..n-1 — a count-only check would let a
+      // duplicated idx plus a missing one load a silently zeroed region
+      // (false negatives), the opposite of "loud on torn state"
+      require(chunks.map(_.getInt(1)).toSet == (0 until nChunks).toSet,
+        s"${g.partPath(Part)}: chunk idx set is not 0..${nChunks - 1} for m=$m — torn filter")
+      val arr = new Array[Long](nWords)
+      chunks.foreach { r =>
+        val base = r.getInt(1) * ChunkLongs
+        val bb = java.nio.ByteBuffer.wrap(r.getAs[Array[Byte]](3))
+        bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        var i = base
+        while (bb.remaining() >= 8) { arr(i) = bb.getLong; i += 1 }
+      }
+      (arr, m, k)
+    }
+
+  /** Load only the geometry of the newest persisted filter — no chunk
+    * collect; cached per generation. */
+  def loadGeometry(spark: SparkSession, tag: String): (Int, Int) =
+    ModelStore.load(spark, storeName(tag), "geometry")(geometryOf(spark, _))
+
+  /** The newest persisted filter as a (word_idx, bits) relation, derived
+    * on the fly from the chunked storage — the distributed view of the
+    * bit array for [[gateRelational]]. */
+  def wordsRelation(spark: SparkSession, tag: String): DataFrame =
+    wordsOf(spark, ModelStore.current(spark, storeName(tag)))
+
+  private def wordsOf(spark: SparkSession, g: ModelStore.Generation): DataFrame = {
     val toLongs = udf { bytes: Array[Byte] =>
       val bb = java.nio.ByteBuffer.wrap(bytes)
       bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -367,7 +373,7 @@ ORDER BY d.doc_id
       while (i < out.length) { out(i) = bb.getLong; i += 1 }
       out
     }
-    spark.table(filterTable(tag)).filter(col("kind") === "chunk")
+    g.read(spark, Part, PartSchema).filter(col("kind") === "chunk")
       .select(col("idx"), posexplode(toLongs(col("bytes"))))
       .select((col("idx").cast("long") * ChunkLongs + col("pos")).as("word_idx"),
         col("col").as("bits"))
@@ -394,12 +400,15 @@ ORDER BY d.doc_id
     * already is; the build side is stated future work, not shipped. */
   def gateRelational(spark: SparkSession, tag: String,
                      arrivals: DataFrame): DataFrame = {
-    val (m, k) = loadGeometry(spark, tag)
-    gateRelationalOn(arrivals, wordsRelation(spark, tag), m, k)
+    // geometry and words from ONE generation, even if a publish lands
+    // between the two reads
+    val g = ModelStore.current(spark, storeName(tag))
+    val (m, k) = ModelStore.cached(g, "geometry")(geometryOf(spark, g))
+    gateRelationalOn(arrivals, wordsOf(spark, g), m, k)
   }
 
   /** [[gateRelational]]'s core against ANY words relation
-    * `(word_idx, bits)` — the persisted-table form above, or an in-session
+    * `(word_idx, bits)` — the persisted form above, or an in-session
     * local relation ([[queryRelational]], which must not leave warehouse
     * state behind). */
   def gateRelationalOn(arrivals: DataFrame, words: DataFrame,
@@ -438,7 +447,7 @@ ORDER BY d.doc_id
     // ADVICE r11: this is a read-only oracle query — the filter words go
     // through an in-session LOCAL relation (1,024 longs at the default
     // geometry), never a warehouse table, so the query is idempotent and
-    // leaves zero state. The persisted-table tier stays what
+    // leaves zero state. The persisted tier stays what
     // [[gateRelational]]/[[persist]] exercise (oracled by the streaming
     // gate specs and q_bloom_dedup's deployment path).
     import spark.implicits._
@@ -457,13 +466,17 @@ ORDER BY d.doc_id
 
   /** Fold a new corpus into a persisted filter (the streaming-ingestion
     * shape: gate, then admit + absorb): build over `corpus` with the
-    * STORED geometry, OR into the stored words, rewrite under the lease.
-    * Bloom filters union losslessly by OR — the result is identical to a
-    * fresh build over the concatenated corpora (spec-pinned). */
+    * STORED geometry, OR into a COPY of the stored words (the loaded array
+    * is the cached generation — an in-place OR that then failed to
+    * publish would corrupt it), publish the result. The lease serializes
+    * absorbs, so no concurrent update is lost. Bloom filters union
+    * losslessly by OR — the result is identical to a fresh build over the
+    * concatenated corpora (spec-pinned). */
   def absorb(spark: SparkSession, tag: String, corpus: DataFrame): Unit =
     LeaseLock.withTableLock(spark, tag) {
-      val (words, m, k) = load(spark, tag)
+      val (stored, m, k) = load(spark, tag)
       val add = build(spark, corpus, k, m)
+      val words = stored.clone()
       var i = 0
       while (i < words.length) { words(i) |= add(i); i += 1 }
       persist(spark, tag, words, m, k)
@@ -497,20 +510,24 @@ ORDER BY d.doc_id
       .groupBy("word_idx").agg(expr("bit_or(mask)").as("bits"))
   }
 
-  /** Persist a relational filter as a word_idx-BUCKETED managed table
-    * (geometry rides as sentinel rows word_idx −1 → m, −2 → k — the
-    * one-write torn-proof discipline; data rows are always ≥ 0). */
+  /** Persist a relational filter as a word_idx-BUCKETED catalog table
+    * pinned at `$path/<relTable(tag)>` — the path-pinned shape of the
+    * other bucketed indexes ([[ShingleIndex]], [[IvfIndex]]): drop the old
+    * entry with its files, then write with an explicit `path`. Geometry
+    * rides as sentinel rows word_idx −1 → m, −2 → k — the one-write
+    * torn-proof discipline; data rows are always ≥ 0. */
   def persistRelational(spark: SparkSession, tag: String, words: DataFrame,
-                        m: Long, k: Int, buckets: Int = 32): Unit =
+                        m: Long, k: Int, path: String, buckets: Int = 32): Unit =
     LeaseLock.withTableLock(spark, tag) {
       import spark.implicits._
-      WarehouseTables.writeManaged(spark, relTable(tag))({
-        val meta = Seq((-1L, m), (-2L, k.toLong)).toDF("word_idx", "bits")
-        words.select(col("word_idx").cast("long"), col("bits").cast("long"))
-          .unionAll(meta)
-      })(_.write.mode("overwrite").format("parquet")
+      val meta = Seq((-1L, m), (-2L, k.toLong)).toDF("word_idx", "bits")
+      val rows = words.select(col("word_idx").cast("long"), col("bits").cast("long"))
+        .unionAll(meta)
+      BucketedMaintenance.dropWithFiles(spark, relTable(tag))
+      rows.write.mode("overwrite").format("parquet")
         .bucketBy(buckets, "word_idx").sortBy("word_idx")
-        .saveAsTable(relTable(tag)))
+        .option("path", s"$path/${relTable(tag)}")
+        .saveAsTable(relTable(tag))
     }
 
   /** Load a relational filter: (words relation, m, k). Loud on torn
@@ -536,10 +553,10 @@ ORDER BY d.doc_id
   }
 
   /** Fold a new corpus into a persisted relational filter: sparse OR by
-    * word_idx union + re-aggregate, rewrite under the lease — the same
-    * lossless-union property as [[absorb]], never materialized. Rewrites
-    * through a staging relation because the overwrite reads its own
-    * table. */
+    * word_idx union + re-aggregate, rewrite under the lease at the
+    * table's current path — the same lossless-union property as
+    * [[absorb]], never materialized. Rewrites through a staging relation
+    * because the overwrite drops its own source files. */
   def absorbRelational(spark: SparkSession, tag: String,
                        corpus: DataFrame): Unit =
     LeaseLock.withTableLock(spark, tag) {
@@ -548,7 +565,10 @@ ORDER BY d.doc_id
         .groupBy("word_idx").agg(expr("bit_or(bits)").as("bits"))
       // materialize before the overwrite drops the source files
       val staged = merged.localCheckpoint(true)
-      persistRelational(spark, tag, staged, m, k)
+      val location = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(relTable(tag)))
+        .location)
+      persistRelational(spark, tag, staged, m, k, location.getParent.toString)
       staged.unpersist()
     }
 

@@ -111,45 +111,52 @@ object LanguageModel {
         round(exp(-col("mean_lnp")), 3).as("ppl"))
   }
 
-  def modelTable(tag: String): String = s"${tag}_lmmodel"
+  /** [[ModelStore]] name of the model persisted under `tag`. */
+  def storeName(tag: String): String = s"${tag}_lmmodel"
 
-  /** Persist a trained bigram model: c12/c1/vs rows all land as DATA rows
-    * of ONE `saveAsTable` (kind ∈ {c12, c1, vs}) — the torn-model
-    * discipline of [[QualityClassifier.persist]]. Writers serialize on
-    * the table lease; orphan reconciliation is marker-gated
-    * ([[WarehouseTables]]). */
+  /** The model's part in a [[ModelStore]] generation. */
+  private val Part = "lm"
+  private val PartSchema = new org.apache.spark.sql.types.StructType()
+    .add("kind", "string").add("w1", "string").add("w2", "string").add("n", "long")
+
+  /** Write a trained bigram model as `g`'s [[Part]]: c12/c1/vs rows are
+    * all DATA rows of ONE part (kind ∈ {c12, c1, vs}) — the torn-model
+    * discipline of [[QualityClassifier.stage]]. */
+  private[operators] def stage(g: ModelStore.Generation, c12: DataFrame,
+                               c1: DataFrame, v: DataFrame): Unit =
+    ModelStore.write(g, Part,
+      c12.select(lit("c12").as("kind"), col("w1"), col("w2"), col("c12").as("n"))
+        .unionAll(c1.select(lit("c1").as("kind"), col("w1"),
+          lit(null).cast("string").as("w2"), col("c1").as("n")))
+        .unionAll(v.select(lit("vs").as("kind"),
+          lit(null).cast("string").as("w1"), lit(null).cast("string").as("w2"),
+          col("vs").as("n"))))
+
+  /** Read `g`'s bigram model: (c12, c1, v) in [[scoreWith]]'s shapes.
+    * Loud on torn state — a missing/duplicated vs row means the part was
+    * not written by [[stage]]. The c12/c1 relations stay FILE-BACKED (a
+    * 100 TB web corpus's bigram vocabulary can exceed any collect or
+    * broadcast budget — the [[scoreOn]] scale note). */
+  private[operators] def read(spark: SparkSession,
+                              g: ModelStore.Generation): (DataFrame, DataFrame, DataFrame) = {
+    val t = g.read(spark, Part, PartSchema)
+    val v = t.filter(col("kind") === "vs").select(col("n").as("vs"))
+    require(v.count() == 1,
+      s"${g.partPath(Part)}: expected exactly one vs row — torn model")
+    (t.filter(col("kind") === "c12").select(col("w1"), col("w2"), col("n").as("c12")),
+      t.filter(col("kind") === "c1").select(col("w1"), col("n").as("c1")),
+      v)
+  }
+
+  /** Persist a trained bigram model as a new [[ModelStore]] generation. */
   def persist(spark: SparkSession, tag: String, c12: DataFrame,
               c1: DataFrame, v: DataFrame): Unit =
-    LeaseLock.withTableLock(spark, tag) {
-      WarehouseTables.writeManaged(spark, modelTable(tag))(
-        c12.select(lit("c12").as("kind"), col("w1"), col("w2"),
-            col("c12").as("n"))
-          .unionAll(c1.select(lit("c1").as("kind"), col("w1"),
-            lit(null).cast("string").as("w2"), col("c1").as("n")))
-          .unionAll(v.select(lit("vs").as("kind"),
-            lit(null).cast("string").as("w1"), lit(null).cast("string").as("w2"),
-            col("vs").as("n"))))(
-        _.write.mode("overwrite").saveAsTable(modelTable(tag)))
-    }
+    ModelStore.publish(spark, storeName(tag))(stage(_, c12, c1, v))
 
-  /** Load a persisted bigram model: (c12, c1, v) in [[scoreWith]]'s
-    * shapes. Loud on torn state — a missing/duplicated vs row means the
-    * table was not written by [[persist]]. The c12/c1 relations stay
-    * TABLE-BACKED (a 100 TB web corpus's bigram vocabulary can exceed any
-    * collect/broadcast budget — the [[scoreOn]] scale note), but the load
-    * is cached per table VERSION so the per-batch serve path validates a
-    * model generation once, not once per batch (r15 opt — the
-    * [[QualityClassifier.load]]/loadPqModel discipline). */
+  /** Load the newest persisted bigram model, validated once per
+    * generation (cached by generation id). */
   def load(spark: SparkSession, tag: String): (DataFrame, DataFrame, DataFrame) =
-    BucketedMaintenance.cachedByVersion(spark, modelTable(tag)) {
-      val t = spark.table(modelTable(tag))
-      val v = t.filter(col("kind") === "vs").select(col("n").as("vs"))
-      require(v.count() == 1,
-        s"${modelTable(tag)}: expected exactly one vs row — torn model table")
-      (t.filter(col("kind") === "c12").select(col("w1"), col("w2"), col("n").as("c12")),
-        t.filter(col("kind") === "c1").select(col("w1"), col("n").as("c1")),
-        v)
-    }
+    ModelStore.load(spark, storeName(tag), Part)(read(spark, _))
 
   /** The oracled query: self-trained scoring of the documents table (the
     * CCNet shape with train = score corpus — the in-domain calibration

@@ -54,12 +54,16 @@ import org.apache.spark.sql.SparkSession
   * previously named as future work now SHIPS as [[ManifestLog]] — an
   * append-only commit-log protocol (atomic manifest-marker creation;
   * readers union committed segments; exactly-once under retries with no
-  * coordination) for the landing/segment shape. The LEASE remains the
-  * supported regime for the bucketed persistent indexes, deliberately:
-  * their value is bucket-PRUNED catalog scans, and per-append manifest
-  * segments have no shared bucket layout to prune — turning segments
-  * back into a pruned table is exactly the maintenance work this lease
-  * serializes. See the [[ManifestLog]] scaladoc's scope note. */
+  * coordination) for the landing/segment shape, and driver-sized models
+  * publish through [[ModelStore]] on the same protocol with no lease
+  * (only read-modify-write [[BloomDedup.absorb]] still takes it, so no
+  * concurrent update is lost). The LEASE remains the supported regime
+  * for the bucketed persistent indexes — path-pinned catalog tables —
+  * deliberately: their value is bucket-PRUNED catalog scans, and
+  * per-append manifest segments have no shared bucket layout to prune —
+  * turning segments back into a pruned table is exactly the maintenance
+  * work this lease serializes. See the [[ManifestLog]] scaladoc's scope
+  * note. */
 object LeaseLock {
 
   final case class Handle(fs: FileSystem, path: Path, token: String)

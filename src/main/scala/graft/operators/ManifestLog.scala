@@ -49,11 +49,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scope boundary (stated, the r11 verdict's missing-item 4 decision):
   * this retires the lease for the APPEND-ONLY landing/segment shape —
-  * streaming ingestion zones, batch landing, receipt logs. The bucketed
-  * persistent indexes ([[ShingleIndex]]/[[IvfIndex]]/[[ImiIndex]]) keep
-  * the lease regime: their value is bucket-PRUNED catalog scans, and a
-  * union of per-append manifest segments has no shared bucket layout for
-  * Spark to prune — making segments bucketed and compacting them into
+  * streaming ingestion zones, batch landing, receipt logs — and, through
+  * [[ModelStore]] (one generation = one segment `gen-<n>`, same marker
+  * and winner rule), for the DRIVER-SIZED models: NB classifier, bigram
+  * LM, curation thresholds, broadcast-tier Bloom filter. The bucketed
+  * persistent indexes ([[ShingleIndex]]/[[IvfIndex]]/[[ImiIndex]],
+  * [[BloomDedup.persistRelational]]) keep the other regime, path-pinned
+  * catalog tables under the lease: their value is bucket-PRUNED catalog
+  * scans, and a union of per-append manifest segments has no shared
+  * bucket layout for Spark to prune — making segments bucketed and compacting them into
   * the canonical table is exactly the maintenance work the lease already
   * serializes. Readers of a manifest log pay a full union scan; that is
   * the landing shape's normal access pattern (read-the-batch,
@@ -64,6 +68,10 @@ object ManifestLog {
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private[operators] val ManifestSuffix = ".manifest"
+
+  /** Reader grace of [[vacuum]] and [[retireSuperseded]]: garbage younger
+    * than this is left alone, because a reader may still be scanning it. */
+  val DefaultGraceMs: Long = 15 * 60 * 1000L
 
   /** Append one batch as a committed segment. Returns the segment's
     * attempt-qualified name, or the already-committed winner's name if a
@@ -107,16 +115,55 @@ object ManifestLog {
       .map(_.getPath.getName.stripSuffix(ManifestSuffix))
       .filter(n => n.startsWith(segId + "__") && n.split("__").length == 2)
     if (mine.nonEmpty) return mine.min
-    val attemptId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val name = s"${segId}__$attemptId"
+    val name = s"${segId}__$newAttemptId"
     df.write.mode("error").parquet(s"$root/data/$name")
-    // COMMIT: atomic create-exclusive of the empty marker. Existence is
-    // the commit bit — nothing to partially read.
-    f.mkdirs(new Path(s"$root/manifests"))
-    val out = f.create(new Path(s"$root/manifests/$name$ManifestSuffix"), false)
-    out.close()
+    commitMarker(spark, root, name)
     name
   }
+
+  /** A fresh attempt id: 32 lower-case hex digits, unique per attempt, so
+    * two attempts never collide on a path. */
+  private[operators] def newAttemptId: String =
+    java.util.UUID.randomUUID().toString.replace("-", "")
+
+  /** COMMIT `name` (`<segId>__<attemptId>`, its data already complete):
+    * atomic create-exclusive of the empty marker. Existence is the commit
+    * bit — nothing to partially read. */
+  private[operators] def commitMarker(spark: SparkSession, root: String,
+                                      name: String): Unit = {
+    val f = fs(spark, root)
+    f.mkdirs(new Path(s"$root/manifests"))
+    f.create(new Path(s"$root/manifests/$name$ManifestSuffix"), false).close()
+  }
+
+  /** One commit marker: `<root>/manifests/<seg>__<attempt>.manifest`. */
+  private[operators] final case class Marker(seg: String, attempt: String,
+                                             status: org.apache.hadoop.fs.FileStatus) {
+    def name: String = s"${seg}__$attempt"
+  }
+
+  /** Every file under `<root>/manifests` (empty when the log is empty). */
+  private def listManifests(f: org.apache.hadoop.fs.FileSystem,
+                            root: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val dir = new Path(s"$root/manifests")
+    if (f.exists(dir)) f.listStatus(dir).toSeq else Seq.empty
+  }
+
+  /** The commit markers among `files`; a foreign file is ignored, never
+    * fatal. */
+  private def parseMarkers(files: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Marker] =
+    files.flatMap { st =>
+      val n = st.getPath.getName
+      if (!n.endsWith(ManifestSuffix)) None
+      else n.stripSuffix(ManifestSuffix).split("__") match {
+        case Array(seg, attempt) => Some(Marker(seg, attempt, st))
+        case _ => None
+      }
+    }
+
+  /** Every commit marker under `root`, winners and losers alike. */
+  private[operators] def markers(spark: SparkSession, root: String): Seq[Marker] =
+    parseMarkers(listManifests(fs(spark, root), root))
 
   private[operators] val CompactWriterId = "compacted"
   private[operators] val SupersedeSuffix = ".supersedes"
@@ -135,21 +182,14 @@ object ManifestLog {
     * Sidecar lists are honored even for compacted segments that are
     * THEMSELVES superseded (chained compaction: C2 supersedes {C1, D};
     * C1's list must still hide {A, B} or they would reappear). */
-  private def committedAttempts(spark: SparkSession,
-                                root: String): Map[String, String] = {
+  private[operators] def committedAttempts(spark: SparkSession,
+                                           root: String): Map[String, String] = {
     val f = fs(spark, root)
     val dir = new Path(s"$root/manifests")
-    if (!f.exists(dir)) return Map.empty
-    val names = f.listStatus(dir).iterator.map(_.getPath.getName).toSeq
-    val committed = names.filter(_.endsWith(ManifestSuffix))
-      .map(_.stripSuffix(ManifestSuffix))
-      .flatMap { n =>
-        n.split("__") match {
-          case Array(seg, attempt) => Some(seg -> attempt)
-          case _ => None // foreign file: ignored, never fatal
-        }
-      }
-    val committedNames = committed.map { case (s, a) => s"${s}__$a" }.toSet
+    val files = listManifests(f, root)
+    val names = files.map(_.getPath.getName)
+    val committed = parseMarkers(files)
+    val committedNames = committed.map(_.name).toSet
     val superseded: Set[String] = names
       .filter(_.endsWith(SupersedeSuffix))
       .map(_.stripSuffix(SupersedeSuffix))
@@ -159,9 +199,9 @@ object ManifestLog {
           java.nio.charset.StandardCharsets.UTF_8)
           .split("\n").map(_.trim).filter(_.nonEmpty)
       }.toSet
-    committed.groupBy(_._1)
+    committed.groupBy(_.seg)
       .filter { case (seg, _) => !superseded(seg) }
-      .map { case (seg, as) => seg -> as.map(_._2).min }
+      .map { case (seg, as) => seg -> as.map(_.attempt).min }
   }
 
   private def readFully(f: org.apache.hadoop.fs.FileSystem,
@@ -216,8 +256,7 @@ object ManifestLog {
         .map(_.stripPrefix(CompactWriterId + "-").toLong)
         .foldLeft(-1L)(math.max) + 1
       val segId = s"$CompactWriterId-$n"
-      val attemptId = java.util.UUID.randomUUID().toString.replace("-", "")
-      val name = s"${segId}__$attemptId"
+      val name = s"${segId}__$newAttemptId"
       spark.read.schema(schema).parquet(current.map(s => s"$root/data/$s"): _*)
         .repartition(targetPartitions)
         .write.option("compression", codec).mode("error")
@@ -229,7 +268,7 @@ object ManifestLog {
       try out.write(current.map(_.split("__")(0)).mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
-      f.create(new Path(s"$root/manifests/$name$ManifestSuffix"), false).close()
+      commitMarker(spark, root, name)
       Some(name)
     }
   }
@@ -241,7 +280,7 @@ object ManifestLog {
     * Sidecar files stay (tiny, and still hiding any late replay of the
     * superseded segIds). Same reader-grace contract as [[vacuum]]. */
   def retireSuperseded(spark: SparkSession, root: String,
-                       graceMs: Long = 15 * 60 * 1000L): Seq[String] = {
+                       graceMs: Long = DefaultGraceMs): Seq[String] = {
     val f = fs(spark, root)
     val dir = new Path(s"$root/manifests")
     if (!f.exists(dir)) return Seq.empty
@@ -381,29 +420,21 @@ object ManifestLog {
     * micro-batch readers; long analytical scans over a log under
     * concurrent replays need a larger grace. */
   def vacuum(spark: SparkSession, root: String,
-             graceMs: Long = 15 * 60 * 1000L): Seq[String] = {
+             graceMs: Long = DefaultGraceMs): Seq[String] = {
     val f = fs(spark, root)
     val dataDir = new Path(s"$root/data")
     if (!f.exists(dataDir)) return Seq.empty
     val cutoff = System.currentTimeMillis() - graceMs
-    val mDir = new Path(s"$root/manifests")
-    val markers = if (f.exists(mDir)) f.listStatus(mDir).toSeq else Seq.empty
-    val parsed = markers.flatMap { st =>
-      val n = st.getPath.getName
-      if (!n.endsWith(ManifestSuffix)) None
-      else n.stripSuffix(ManifestSuffix).split("__") match {
-        case Array(seg, attempt) => Some((seg, attempt, st))
-        case _ => None
-      }
-    }
-    val winners: Set[String] = parsed.groupBy(_._1)
-      .map { case (seg, as) => s"${seg}__${as.map(_._2).min}" }.toSet
+    val files = listManifests(f, root)
+    val parsed = parseMarkers(files)
+    val winners: Set[String] = parsed.groupBy(_.seg)
+      .map { case (seg, as) => s"${seg}__${as.map(_.attempt).min}" }.toSet
     val removed = Seq.newBuilder[String]
     // losing markers first: once a loser's marker is gone its data dir is
     // plain unreferenced garbage for this (or any later) sweep
-    parsed.foreach { case (seg, attempt, st) =>
-      val name = s"${seg}__$attempt"
-      if (!winners(name) && st.getModificationTime < cutoff) {
+    parsed.foreach { mk =>
+      val st = mk.status
+      if (!winners(mk.name) && st.getModificationTime < cutoff) {
         f.delete(st.getPath, true)
         removed += st.getPath.getName
       }
@@ -418,8 +449,8 @@ object ManifestLog {
     // orphan compaction sidecars: a crash between sidecar write and
     // marker create leaves a .supersedes file that hides nothing (no
     // marker) — plain garbage once its data dir is gone
-    val committedNames = parsed.map { case (s, a, _) => s"${s}__$a" }.toSet
-    markers.foreach { st =>
+    val committedNames = parsed.map(_.name).toSet
+    files.foreach { st =>
       val nm = st.getPath.getName
       if (nm.endsWith(SupersedeSuffix) &&
         !committedNames(nm.stripSuffix(SupersedeSuffix)) &&

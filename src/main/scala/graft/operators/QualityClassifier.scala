@@ -134,65 +134,64 @@ object QualityClassifier {
       .withColumn("predicted", col("score") > 0)
   }
 
-  def modelTable(tag: String): String = s"${tag}_qcmodel"
+  /** [[ModelStore]] name of the model persisted under `tag`. */
+  def storeName(tag: String): String = s"${tag}_qcmodel"
 
-  /** Persist a fitted model: llr rows, the prior, and the feature
-    * dimension all land as DATA rows of ONE `saveAsTable` (kind ∈
-    * {llr, prior, dim}) — the model can never exist without its prior or
-    * its dimension (the [[ImiIndex]] seed-row lesson: a second DDL after
-    * the write leaves a torn model for a crash to expose). Writers
-    * serialize on the index lease. */
+  /** The model's part in a [[ModelStore]] generation. */
+  private val Part = "qc"
+  private val PartSchema = new org.apache.spark.sql.types.StructType()
+    .add("kind", "string").add("feat", "int").add("value", "double")
+
+  /** Write a fitted model as `g`'s [[Part]]: llr rows, the prior and the
+    * feature dimension are DATA rows of ONE part (kind ∈ {llr, prior,
+    * dim}), so the model can never exist without its prior or its
+    * dimension (the [[ImiIndex]] seed-row lesson). */
+  private[operators] def stage(g: ModelStore.Generation, model: DataFrame,
+                               totals: DataFrame, dim: Int): Unit = {
+    val spark = model.sparkSession
+    import spark.implicits._
+    ModelStore.write(g, Part,
+      model.select(lit("llr").as("kind"), col("feat"), col("llr").as("value"))
+        .unionAll(totals.select(lit("prior").as("kind"), lit(-1).as("feat"),
+          col("log_prior").as("value")))
+        .unionAll(Seq(("dim", -1, dim.toDouble)).toDF("kind", "feat", "value")))
+  }
+
+  /** Read `g`'s model: (model, totals-shaped prior, dim). Loud on torn
+    * state — a missing prior/dim row or an llr row count that disagrees
+    * with the stored dim means the part was not written by [[stage]] and
+    * scoring it would be silently wrong. The model is dim-bounded (≤ 256
+    * llr rows + prior + dim): ONE collect, validated on the driver, and
+    * returned as LOCAL relations (the [[IvfIndex.loadModel]] discipline).
+    * Values are the exact stored doubles. */
+  private[operators] def read(spark: SparkSession,
+                              g: ModelStore.Generation): (DataFrame, DataFrame, Int) = {
+    import spark.implicits._
+    val where = g.partPath(Part)
+    val rows = g.read(spark, Part, PartSchema).collect()
+    val dims = rows.filter(_.getString(0) == "dim")
+    require(dims.length == 1, s"$where: expected exactly one dim row, found ${dims.length}")
+    val dim = dims(0).getDouble(2).toInt
+    val priors = rows.filter(_.getString(0) == "prior")
+    require(priors.length == 1, s"$where: expected exactly one prior row")
+    val llr = rows.filter(_.getString(0) == "llr")
+    require(llr.length == dim,
+      s"$where: ${llr.length} llr rows for dim $dim — torn model")
+    (llr.map(r => (r.getInt(1), r.getDouble(2))).toSeq.toDF("feat", "llr"),
+      Seq(priors(0).getDouble(2)).toDF("log_prior"),
+      dim)
+  }
+
+  /** Persist a fitted model as a new [[ModelStore]] generation. */
   def persist(spark: SparkSession, tag: String, model: DataFrame,
               totals: DataFrame, dim: Int): Unit =
-    LeaseLock.withTableLock(spark, tag) {
-      import spark.implicits._
-      // fresh-catalog/stale-warehouse reconciliation — marker-gated, see
-      // [[WarehouseTables]] for the mechanism and its assumption boundary
-      WarehouseTables.writeManaged(spark, modelTable(tag))(
-        model.select(lit("llr").as("kind"), col("feat"),
-            col("llr").as("value"))
-          .unionAll(totals.select(lit("prior").as("kind"), lit(-1).as("feat"),
-            col("log_prior").as("value")))
-          .unionAll(Seq(("dim", -1, dim.toDouble)).toDF("kind", "feat", "value")))(
-        _.write.mode("overwrite").saveAsTable(modelTable(tag)))
-    }
+    ModelStore.publish(spark, storeName(tag))(stage(_, model, totals, dim))
 
-  /** Load a persisted model: returns (model, totals-shaped prior, dim).
-    * Loud on torn state — a missing prior/dim row or an llr row count
-    * that disagrees with the stored dim means the table was not written
-    * by [[persist]] and scoring it would be silently wrong.
-    *
-    * r15 opt (the serve hot path paid ~0.8 s of load overhead PER BATCH):
-    * the model is dim-bounded (≤ 256 llr rows + prior + dim) — collect it
-    * in ONE job and return LOCAL relations, exactly the
-    * [[IvfIndex.loadModel]] discipline (a model is driver-state by
-    * definition; the old shape re-scanned the catalog table for three
-    * separate validation jobs and rebuilt a table-scan broadcast per
-    * scoring call). Validation runs on the collected rows — same torn-
-    * state checks, zero extra jobs — and the whole load is cached per
-    * table VERSION ([[BucketedMaintenance.cachedByVersion]], the
-    * loadPqModel precedent), so a long-running server validates each
-    * model generation once, not once per batch. Values are the exact
-    * stored doubles either way. */
+  /** Load the newest persisted model: (model, totals-shaped prior, dim),
+    * cached per generation, so a long-running server validates each
+    * model generation once, not once per batch. */
   def load(spark: SparkSession, tag: String): (DataFrame, DataFrame, Int) =
-    BucketedMaintenance.cachedByVersion(spark, modelTable(tag)) {
-      import spark.implicits._
-      val rows = spark.table(modelTable(tag))
-        .select(col("kind"), col("feat"), col("value")).collect()
-      val dims = rows.filter(_.getString(0) == "dim")
-      require(dims.length == 1,
-        s"${modelTable(tag)}: expected exactly one dim row, found ${dims.length}")
-      val dim = dims(0).getDouble(2).toInt
-      val priors = rows.filter(_.getString(0) == "prior")
-      require(priors.length == 1,
-        s"${modelTable(tag)}: expected exactly one prior row")
-      val llr = rows.filter(_.getString(0) == "llr")
-      require(llr.length == dim,
-        s"${modelTable(tag)}: ${llr.length} llr rows for dim $dim — torn model table")
-      (llr.map(r => (r.getInt(1), r.getDouble(2))).toSeq.toDF("feat", "llr"),
-        Seq(priors(0).getDouble(2)).toDF("log_prior"),
-        dim)
-    }
+    ModelStore.load(spark, storeName(tag), Part)(read(spark, _))
 
   /** Curated-positive label for the oracle query: three of the twenty
     * synthetic sources play "reference corpus" (the wiki-vs-crawl split

@@ -220,7 +220,7 @@ ORDER BY d.doc_id
 
   /** The gate → band → langid → quota tail, ONE definition shared by
     * [[learnedTail]] (thresholds computed in-plan) and [[serveCuration]]
-    * (thresholds loaded from the calibration table) — the oracle pins
+    * (thresholds loaded from the curation generation) — the oracle pins
     * `q_curation_served` row-identical to `q_curation_learned`, and a
     * tail change applied to one copy would silently break that identity.
     * `pplOf` scores a (doc_id, text) relation under whichever LM form the
@@ -312,16 +312,28 @@ ORDER BY d.doc_id
     Dsir.selectOn(spark, deduped, k, dim)
   }
 
-  def calibTable(tag: String): String = s"${tag}_curcal"
+  /** [[ModelStore]] name of the curation models built under `tag`: one
+    * generation holds the NB classifier, the bigram LM and the two
+    * calibrated thresholds. */
+  def storeName(tag: String): String = s"${tag}_curation"
+
+  /** The thresholds' part in a curation generation: rows (kind, value),
+    * kind ∈ {tau_c, tau_p}. */
+  private val CalPart = "cal"
+  private val CalSchema = new org.apache.spark.sql.types.StructType()
+    .add("kind", "string").add("value", "double")
 
   /** BUILD phase of the persisted-model curation deployment: train the NB
     * classifier and the reference bigram LM on `deduped` (the same
-    * relations [[curationLearned]] trains in-query), persist both as
-    * catalog tables, then CALIBRATE the two thresholds — classifier
-    * median and perplexity 2/3-quantile — by scoring the training corpus
-    * THROUGH THE PERSISTED TABLES (so serving's arithmetic path is the
-    * one being calibrated) and persist them as a third table. Runs once
-    * per model generation; [[serveCuration]] is the per-batch side.
+    * relations [[curationLearned]] trains in-query), stage both in a new
+    * [[ModelStore]] generation, then CALIBRATE the two thresholds —
+    * classifier median and perplexity 2/3-quantile — by scoring the
+    * training corpus THROUGH THE STAGED PARTS (so serving's arithmetic
+    * path is the one being calibrated), stage them too, and commit the
+    * generation. Models and thresholds become visible together or not at
+    * all: a build that fails anywhere leaves the previous generation
+    * serving. Runs once per model generation; [[serveCuration]] is the
+    * per-batch side.
     *
     * The thresholds are each ONE scalar (a percentile aggregate
     * collected driver-side — model-sized by construction); CCNet itself
@@ -329,18 +341,17 @@ ORDER BY d.doc_id
     * same deployment substitution note as [[curationLearned]]. */
   def buildCurationModels(spark: SparkSession, deduped: DataFrame,
                           tag: String, dim: Int = QualityClassifier.DefaultDim): Unit = {
+    import spark.implicits._
     val labeled = deduped.select(col("doc_id"),
       col("source").isin(QualityClassifier.PositiveSources: _*).as("label"),
       col("text"))
     val ref = deduped.filter(col("source").isin(QualityClassifier.PositiveSources: _*))
       .select("doc_id", "text")
-    // The NB branch (train jobs + persist) and the LM branch (the
-    // aggregate evaluation happens inside persist's write) are
-    // INDEPENDENT — overlap them (guide §2.6; the Pq.train discipline).
-    // Both persists serialize on the same tag lease, but each branch's
-    // TRAINING jobs overlap the other's persist, which is where the time
-    // was (probe: NB train 1.05 s + NB persist 1.31 s + LM persist
-    // 0.88 s sequential). Futures settle before anything proceeds.
+    val g = ModelStore.stage(spark, storeName(tag))
+    // The NB branch (train jobs + part write) and the LM branch (the
+    // aggregate evaluation happens inside its part write) are INDEPENDENT
+    // — overlap them (guide §2.6; the Pq.train discipline). Futures settle
+    // before anything proceeds.
     locally {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
@@ -348,86 +359,104 @@ ORDER BY d.doc_id
       import scala.util.Try
       val nbF = Future {
         val (model, totals) = QualityClassifier.train(spark, labeled, dim)
-        QualityClassifier.persist(spark, tag, model, totals, dim)
+        QualityClassifier.stage(g, model, totals, dim)
       }
       val lmF = Future {
         val (c12, c1, v) = LanguageModel.trainOn(ref)
-        LanguageModel.persist(spark, tag, c12, c1, v)
+        LanguageModel.stage(g, c12, c1, v)
       }
       Seq(nbF, lmF).map(f => Await.result(f.transform(Try(_)), Duration.Inf))
         .foreach(_.get)
     }
-    // calibrate through the persisted tables (serving's exact path)
-    val (lm, lp, ldim) = QualityClassifier.load(spark, tag)
-    val (sc12, sc1, sv) = LanguageModel.load(spark, tag)
+    // calibrate through the staged parts (serving's exact path)
+    val (lm, lp, ldim) = QualityClassifier.read(spark, g)
+    val (sc12, sc1, sv) = LanguageModel.read(spark, g)
     // referenced by the tauC collect AND the tauP chain — barrier so the
-    // persisted-table NB scoring runs once per calibration, not per
+    // stored-model NB scoring runs once per calibration, not per
     // threshold (r14 opt)
     val scored = org.apache.spark.sql.graft.CheckpointShim
       .statsHonestLocalCheckpoint(deduped.join(
         QualityClassifier.scoreDocs(deduped.select("doc_id", "text"), lm, lp, ldim)
           .select("doc_id", "score"), "doc_id"))
-    val tauC = scored.agg(round(expr("percentile(score, 0.5)"), 6))
-      .collect()(0).getDouble(0)
-    val gated = scored.filter(col("score") >= tauC)
-    val withPpl = gated.join(
-      LanguageModel.scoreWith(gated.select("doc_id", "text"), sc12, sc1, sv), "doc_id")
-      .filter(col("n_bigrams") > 0)
-    val tauP = withPpl.agg(round(expr("percentile(ppl, 2.0/3)"), 6))
-      .collect()(0).getDouble(0)
-    // calibration is done with the scored barrier — free it before the
-    // (cheap) calib write so a build leaves no block-manager residue
-    // (the serveCuration cleanup discipline, ADVICE r14)
-    org.apache.spark.sql.graft.CheckpointShim.freeCheckpoint(scored)
-    LeaseLock.withTableLock(spark, tag) {
-      import spark.implicits._
-      WarehouseTables.writeManaged(spark, calibTable(tag))(
-        Seq(("tau_c", tauC), ("tau_p", tauP)).toDF("kind", "value"))(
-        _.write.mode("overwrite").saveAsTable(calibTable(tag)))
+    // an empty input has no percentile (NULL): refuse rather than commit
+    // a generation whose gate or band would drop every document
+    def threshold(df: DataFrame, what: String): Double = {
+      val r = df.collect()(0)
+      require(!r.isNullAt(0), s"${storeName(tag)}: calibration found no $what — " +
+        "no generation committed")
+      r.getDouble(0)
     }
+    try {
+      val tauC = threshold(scored.agg(round(expr("percentile(score, 0.5)"), 6)),
+        "scored document")
+      val gated = scored.filter(col("score") >= tauC)
+      val withPpl = gated.join(
+        LanguageModel.scoreWith(gated.select("doc_id", "text"), sc12, sc1, sv), "doc_id")
+        .filter(col("n_bigrams") > 0)
+      val tauP = threshold(withPpl.agg(round(expr("percentile(ppl, 2.0/3)"), 6)),
+        "gated document with a bigram")
+      ModelStore.write(g, CalPart, Seq(("tau_c", tauC), ("tau_p", tauP)).toDF("kind", "value"))
+    } finally {
+      // calibration is done with the scored barrier — free it so a build
+      // leaves no block-manager residue (the serveCuration cleanup
+      // discipline, ADVICE r14)
+      org.apache.spark.sql.graft.CheckpointShim.freeCheckpoint(scored)
+    }
+    ModelStore.commit(spark, g)
   }
 
-  /** SERVE phase: curate ONE BATCH from the persisted tables alone — no
-    * training, no threshold aggregation, no reference-corpus scan. Per
-    * batch this is: NB scoring against the broadcast llr table, the
-    * stored tau_c gate, LM perplexity against the stored bigram counts,
-    * the stored tau_p band, langid, per-language quota — the
-    * build-once/score-per-batch shape a 100 TB deployment actually runs
-    * ([[curationLearned]] is its self-contained-oracle twin, which must
-    * train in-query and is therefore dominated by training cost; the
-    * SCALING r12 rows quantify the decoupling). */
-  def serveCuration(spark: SparkSession, batch: DataFrame, tag: String,
-                    quota: Int = 100): DataFrame = {
-    val (model, prior, dim) = QualityClassifier.load(spark, tag)
-    val (c12, c1, v) = LanguageModel.load(spark, tag)
-    // ONE driver-side collect of the (two-row, model-sized) calibration
-    // table validates both thresholds — torn-calib loudness (the
-    // LanguageModel.load discipline: a missing tau row would otherwise
-    // cross-join a ZERO-row frame and silently curate the batch to
-    // nothing; a duplicated one would double every row ahead of the quota
-    // window) without launching an eager count job per threshold on the
-    // per-batch hot path
-    val cal = spark.table(calibTable(tag)).collect()
-      .groupBy(_.getString(0))
-    def tau(kind: String, as: String): DataFrame = {
+  /** One curation generation as [[serveCuration]] consumes it. */
+  private final case class CurationModels(
+      model: DataFrame, prior: DataFrame, dim: Int,
+      c12: DataFrame, c1: DataFrame, v: DataFrame,
+      tauC: DataFrame, tauP: DataFrame)
+
+  /** Read a committed curation generation. ONE driver-side collect of the
+    * (two-row, model-sized) thresholds part validates both thresholds —
+    * torn-calibration loudness: a missing tau row would otherwise
+    * cross-join a ZERO-row frame and silently curate every batch to
+    * nothing; a duplicated one would double every row ahead of the quota
+    * window. */
+  private def readCuration(spark: SparkSession, g: ModelStore.Generation): CurationModels = {
+    val (model, prior, dim) = QualityClassifier.read(spark, g)
+    val (c12, c1, v) = LanguageModel.read(spark, g)
+    val cal = g.read(spark, CalPart, CalSchema).collect().groupBy(_.getString(0))
+    def tau(kind: String): DataFrame = {
       val rows = cal.getOrElse(kind, Array.empty)
       require(rows.length == 1,
-        s"${calibTable(tag)}: expected exactly one $kind row — torn calibration table")
-      spark.range(1).select(lit(rows(0).getDouble(1)).as(as))
+        s"${g.partPath(CalPart)}: expected exactly one $kind row — torn calibration")
+      spark.range(1).select(lit(rows(0).getDouble(1)).as(kind))
     }
-    val tauP = tau("tau_p", "tau_p")
+    CurationModels(model, prior, dim, c12, c1, v, tau("tau_c"), tau("tau_p"))
+  }
+
+  /** SERVE phase: curate ONE BATCH from the newest committed curation
+    * generation alone — no training, no threshold aggregation, no
+    * reference-corpus scan. Per batch this is: NB scoring against the
+    * broadcast llr relation, the stored tau_c gate, LM perplexity against
+    * the stored bigram counts, the stored tau_p band, langid,
+    * per-language quota — the build-once/score-per-batch shape a 100 TB
+    * deployment actually runs ([[curationLearned]] is its
+    * self-contained-oracle twin, which must train in-query and is
+    * therefore dominated by training cost; the SCALING r12 rows quantify
+    * the decoupling). Models and thresholds come from ONE generation,
+    * read once per generation (cached by generation id), so a batch pays
+    * no model-load job. */
+  def serveCuration(spark: SparkSession, batch: DataFrame, tag: String,
+                    quota: Int = 100): DataFrame = {
+    val cm = ModelStore.load(spark, storeName(tag), "serve")(readCuration(spark, _))
     // same multi-reference economics as learnedTail's scored checkpoint:
     // the gated chain references this twice (join left side + LM-scoring
     // input), and without a barrier each reference re-runs the NB scoring
     // of the whole batch (r14 opt)
     val scored = org.apache.spark.sql.graft.CheckpointShim
       .statsHonestLocalCheckpoint(batch.join(
-        QualityClassifier.scoreDocs(batch.select("doc_id", "text"), model, prior, dim)
+        QualityClassifier.scoreDocs(batch.select("doc_id", "text"), cm.model, cm.prior, cm.dim)
           .select("doc_id", "score"), "doc_id"))
     val intermediates = scala.collection.mutable.ArrayBuffer[DataFrame](scored)
-    val res = gateBandQuota(scored, tau("tau_c", "tau_c"),
-      d => LanguageModel.scoreWith(d, c12, c1, v),
-      _ => tauP,
+    val res = gateBandQuota(scored, cm.tauC,
+      d => LanguageModel.scoreWith(d, cm.c12, cm.c1, cm.v),
+      _ => cm.tauP,
       quota, intermediates += _)
     // Materialize the (quota-bounded) result and FREE the per-batch
     // intermediates before returning (ADVICE r14): this is the per-batch
@@ -435,7 +464,7 @@ ORDER BY d.doc_id
     // checkpoints above were otherwise never unpersisted — block-manager
     // storage grew without bound across batches. The returned relation is
     // a self-contained LogicalRDD (it also no longer reads the model
-    // tables, which lets [[curationServed]] drop them without a second
+    // files, which lets [[curationServed]] drop them without a second
     // freeze). Same try/finally discipline as [[Pq.train]].
     val out = org.apache.spark.sql.graft.CheckpointShim
       .statsHonestLocalCheckpoint(res)
@@ -447,16 +476,16 @@ ORDER BY d.doc_id
     * build the models from the deduped corpus, serve the SAME corpus as
     * the batch — which makes the result identical to [[curationLearned]]
     * by construction (same training relations, same thresholds, same
-    * gates; the only difference is that every model crosses a catalog
-    * table on the way). Oracled by the LITERAL [[curationLearnedSql]] —
-    * the `q_dedup_indexed` discipline: stored path pinned to the
-    * recompute path's exact SQL.
+    * gates; the only difference is that every model crosses the
+    * [[ModelStore]] on the way). Oracled by the LITERAL
+    * [[curationLearnedSql]] — the `q_dedup_indexed` discipline: stored
+    * path pinned to the recompute path's exact SQL.
     *
-    * Idempotence: a read-only oracle query must not leave warehouse
-    * state (ADVICE r11 on q_bloom_relational), so the quota-bounded
-    * result is materialized and the three model tables are dropped
-    * before returning. Deployments call [[buildCurationModels]] /
-    * [[serveCuration]] directly and keep the tables. */
+    * Idempotence: a read-only oracle query must not leave state behind
+    * (ADVICE r11 on q_bloom_relational), so the quota-bounded result is
+    * materialized and the store generation is dropped before returning.
+    * Deployments call [[buildCurationModels]] / [[serveCuration]]
+    * directly and keep the generation. */
   def curationServed(spark: SparkSession, dir: String, quota: Int = 100,
                      dim: Int = QualityClassifier.DefaultDim): DataFrame = {
     val tag = s"qcurserved_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
@@ -467,15 +496,12 @@ ORDER BY d.doc_id
         exactDedupOn(spark.read.parquet(s"$dir/documents.parquet")
           .select("doc_id", "source", "text")))
     buildCurationModels(spark, deduped, tag, dim)
-    // serveCuration now returns an already-materialized LogicalRDD (it
-    // freezes its result to free its per-batch intermediates — ADVICE
-    // r14), so the relation no longer reads the model tables we drop
-    // below and needs no second freeze here. Zero collect() of row data
-    // (r12 verdict task 4 normalized the old collect/parallelize
-    // round-trip).
+    // serveCuration returns an already-materialized LogicalRDD, so the
+    // relation no longer reads the model files we drop below. Zero
+    // collect() of row data (r12 verdict task 4 normalized the old
+    // collect/parallelize round-trip).
     val frozen = serveCuration(spark, deduped, tag, quota)
-    Seq(QualityClassifier.modelTable(tag), LanguageModel.modelTable(tag),
-      calibTable(tag)).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    ModelStore.drop(spark, storeName(tag))
     org.apache.spark.sql.graft.CheckpointShim.freeCheckpoint(deduped)
     frozen
   }

@@ -109,7 +109,7 @@ object BloomIngestGate {
   }
 
   /** Start the gate. `stream` must carry (doc_id: long, text: string);
-    * the filter table `tag` must exist ([[BloomDedup.persist]] an empty
+    * the filter `tag` must exist ([[BloomDedup.persist]] an empty
     * or pre-seeded filter first — geometry is deployment-chosen, see the
     * sizing formula in [[BloomDedup]]'s scaladoc). */
   def start(stream: DataFrame, tag: String, landingDir: String,

@@ -157,7 +157,7 @@ object DsirBloomScaleProbe {
             .filter(col("bloom_dup")).count()
         }
         require(dupsRel == n, s"relational tier false negatives: $dupsRel of $n")
-        spark.sql(s"DROP TABLE ${BloomDedup.filterTable(tag)}")
+        graft.operators.ModelStore.drop(spark, BloomDedup.storeName(tag))
       }
     }
     spark.stop()

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** ONE composed pass of the full training-data pipeline at corpus scale —
   * the "is the system a system" number (r12 verdict task 7). Every stage
-  * probe exists separately (CurationServedProbe, DsirBloomScaleProbe,
-  * C4ScaleProbe, IndexBench); this runs them COMPOSED, each stage
+  * probe exists separately (DsirBloomScaleProbe, C4ScaleProbe,
+  * IndexBench); this runs them COMPOSED, each stage
   * consuming the previous stage's output, with per-stage walls and the
   * end-to-end docs/s:
   *
@@ -168,9 +168,8 @@ object PipelineEndToEnd {
     println(f"[pipe] funnel: landed $n0 -> rules $n1 -> curated $n2 " +
       f"(bloom candidates $bloomCandidates) -> final $n3 -> $bins packed bins, $shardRows manifest rows")
     println(f"[pipe] TOTAL $total%.1f s end-to-end = ${n0 / total}%.0f docs/s ingested")
-    // leave no warehouse state behind
-    Seq(QualityClassifier.modelTable(tag), LanguageModel.modelTable(tag),
-      Sampling.calibTable(tag)).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    // leave no model generation behind
+    ModelStore.drop(spark, Sampling.storeName(tag))
     spark.stop()
   }
 }

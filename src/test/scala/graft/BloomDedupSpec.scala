@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.BloomDedup
+import graft.operators.{BloomDedup, ModelStore}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -106,14 +106,44 @@ class BloomDedupSpec extends AnyFunSuite {
     val (after, _, _) = BloomDedup.load(spark, tag)
     assert(after.toSeq == BloomDedup.build(spark, a.unionAll(b), 3, m).toSeq)
     // torn state: drop the geometry row → load must refuse
-    spark.sql(s"CREATE TABLE ${BloomDedup.filterTable(s"${tag}_torn")} AS " +
-      s"SELECT * FROM ${BloomDedup.filterTable(tag)} WHERE kind <> 'm'")
+    val stored = spark.read.parquet(
+      ModelStore.current(spark, BloomDedup.storeName(tag)).partPath("filter"))
+    ModelStore.publish(spark, BloomDedup.storeName(s"${tag}_torn"))(
+      ModelStore.write(_, "filter", stored.filter(col("kind") =!= "m")))
     val e = intercept[IllegalArgumentException] {
       BloomDedup.load(spark, s"${tag}_torn")
     }
     assert(e.getMessage.contains("expected exactly one m row"))
-    spark.sql(s"DROP TABLE ${BloomDedup.filterTable(tag)}")
-    spark.sql(s"DROP TABLE ${BloomDedup.filterTable(s"${tag}_torn")}")
+    ModelStore.drop(spark, BloomDedup.storeName(tag))
+    ModelStore.drop(spark, BloomDedup.storeName(s"${tag}_torn"))
+  }
+
+  test("an absorb that fails after the OR leaves the loaded filter unchanged") {
+    val tag = s"bloomabsorb_${System.nanoTime()}"
+    val m = 1 << 10
+    val wa = BloomDedup.build(spark, (1 to 40).map(i => s"pa $i").toDF("text"), 3, m)
+    BloomDedup.persist(spark, tag, wa, m, 3)
+    assert(BloomDedup.load(spark, tag)._1.toSeq == wa.toSeq) // now cached
+    // the publish of the absorbed filter fails: the store's data directory
+    // is replaced by a plain file, so no new generation can be written
+    val name = BloomDedup.storeName(tag)
+    val data = new org.apache.hadoop.fs.Path(ModelStore.root(spark, name), "data")
+    val aside = new org.apache.hadoop.fs.Path(ModelStore.root(spark, name), "data.aside")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.rename(data, aside)
+    fs.create(data, false).close()
+    try {
+      intercept[Exception] {
+        BloomDedup.absorb(spark, tag, (1 to 40).map(i => s"pb $i").toDF("text"))
+      }
+    } finally {
+      fs.delete(data, false)
+      fs.rename(aside, data)
+    }
+    val (after, am, ak) = BloomDedup.load(spark, tag)
+    assert(after.toSeq == wa.toSeq && am == m && ak == 3,
+      "a failed absorb leaked its bits into the cached generation")
+    ModelStore.drop(spark, name)
   }
 
   test("gate survives a join-derived text column (Catalyst HOF-pushdown corner)") {
@@ -175,7 +205,7 @@ class BloomDedupSpec extends AnyFunSuite {
     // collected anywhere (no broadcast variable, no literal array)
     val plan = rel.queryExecution.executedPlan.toString
     assert(plan.contains("Join"), plan)
-    spark.sql(s"DROP TABLE ${BloomDedup.filterTable(tag)}")
+    ModelStore.drop(spark, BloomDedup.storeName(tag))
   }
 
   test("plan shape: the gate is shuffle-free") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.BloomDedup
+import graft.operators.{BloomDedup, BucketedMaintenance}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,7 +52,8 @@ class BloomDistributedSpec extends AnyFunSuite {
     val a = corpus(200)
     val b = corpus(200, salt = "b")
     val m = 1L << 20
-    BloomDedup.persistRelational(spark, "bloomrel_t", BloomDedup.buildRelational(a, K, m), m, K)
+    BloomDedup.persistRelational(spark, "bloomrel_t", BloomDedup.buildRelational(a, K, m), m, K,
+      java.nio.file.Files.createTempDirectory("bloomrel_t").toString)
     try {
       val (w0, m0, k0) = BloomDedup.loadRelational(spark, "bloomrel_t")
       assert(m0 == m && k0 == K)
@@ -64,13 +65,14 @@ class BloomDistributedSpec extends AnyFunSuite {
       // gate through the stored table: everything absorbed is flagged
       val gated = BloomDedup.gateRelationalStored(spark, "bloomrel_t", a.unionAll(b))
       assert(gated.filter(!col("bloom_dup")).count() == 0)
-    } finally spark.sql(s"DROP TABLE IF EXISTS ${BloomDedup.relTable("bloomrel_t")}")
+    } finally BucketedMaintenance.dropWithFiles(spark, BloomDedup.relTable("bloomrel_t"))
   }
 
   test("stored filter is bucketed by word_idx: the gate join's filter side has no Exchange") {
     val m = 1L << 20
     BloomDedup.persistRelational(spark, "bloomrel_p",
-      BloomDedup.buildRelational(corpus(200), K, m), m, K)
+      BloomDedup.buildRelational(corpus(200), K, m), m, K,
+      java.nio.file.Files.createTempDirectory("bloomrel_p").toString)
     try {
       // DIFFERENTIAL Exchange count (a positional substring check here was
       // vacuous — review r12): with broadcast joins pinned off so both
@@ -97,7 +99,7 @@ class BloomDistributedSpec extends AnyFunSuite {
       assert(exchanges(plain) == exchanges(stored) + 1,
         s"bucketing no longer prunes the filter-side Exchange: " +
           s"stored=${exchanges(stored)} plain=${exchanges(plain)}\n$stored\n---\n$plain")
-    } finally spark.sql(s"DROP TABLE IF EXISTS ${BloomDedup.relTable("bloomrel_p")}")
+    } finally BucketedMaintenance.dropWithFiles(spark, BloomDedup.relTable("bloomrel_p"))
   }
 
   test("distributed oracle query: both polarities, exact ⟹ bloom, row-typed like the broadcast tier") {

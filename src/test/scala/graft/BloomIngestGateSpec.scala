@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.BloomDedup
+import graft.operators.{BloomDedup, ModelStore}
 import graft.streaming.BloomIngestGate
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -60,7 +60,7 @@ class BloomIngestGateSpec extends AnyFunSuite {
     // the state is exactly one fixed-size filter, whatever was absorbed
     val (words, m, _) = BloomDedup.load(spark, tag)
     assert(words.length == (m + 63) >>> 6 && m == M)
-    spark.sql(s"DROP TABLE ${BloomDedup.filterTable(tag)}")
+    ModelStore.drop(spark, BloomDedup.storeName(tag))
   }
 
   test("dup_of names the within-batch representative even when that representative is itself dropped") {
@@ -93,7 +93,7 @@ class BloomIngestGateSpec extends AnyFunSuite {
     val landed = spark.read.parquet(s"$root/landing")
       .select("doc_id").as[Long].collect().toSet
     assert(landed == Set(1L))
-    spark.sql(s"DROP TABLE ${BloomDedup.filterTable(tag)}")
+    ModelStore.drop(spark, BloomDedup.storeName(tag))
   }
 
   test("replay of an absorbed batch reconciles to the first attempt") {
@@ -123,6 +123,6 @@ class BloomIngestGateSpec extends AnyFunSuite {
       8L, tag, s"$root/landing", s"$root/receipts")
     val land3 = spark.read.parquet(s"$root/landing")
     assert(land3.filter(col("doc_id") === 12L).isEmpty)
-    spark.sql(s"DROP TABLE ${BloomDedup.filterTable(tag)}")
+    ModelStore.drop(spark, BloomDedup.storeName(tag))
   }
 }

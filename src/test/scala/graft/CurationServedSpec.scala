@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{LanguageModel, QualityClassifier, Sampling, WarehouseTables}
+import graft.operators.{LanguageModel, ModelStore, Sampling}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * The oracle pins q_curation_served row-identical to q_curation_learned
   * at sf0.01; these specs pin the pieces the hash can't explain: the
   * stored-path ≡ recompute-path equality at another SF, serving a batch
-  * the models never saw, torn-table loudness, and the marker-gated orphan
-  * reconciliation. */
+  * the models never saw, torn-model loudness, that a failed build leaves
+  * the previous generation serving, and that no catalog table is
+  * involved. */
 class CurationServedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val sf = "/root/testdata/sf0.001"
@@ -21,13 +22,50 @@ class CurationServedSpec extends AnyFunSuite {
     served.zip(learned).foreach { case (s, l) => assert(s == l) }
   }
 
-  test("curationServed leaves no warehouse tables behind (read-only oracle query)") {
+  test("curationServed leaves no store generation behind (read-only oracle query)") {
     Sampling.curationServed(spark, sf).collect()
     val tag = s"qcurserved_${sf.replaceAll("[^a-zA-Z0-9]", "_")}"
-    Seq(QualityClassifier.modelTable(tag), LanguageModel.modelTable(tag),
-      Sampling.calibTable(tag)).foreach { t =>
-      assert(!spark.catalog.tableExists(t), s"$t left behind")
-    }
+    val name = Sampling.storeName(tag)
+    assert(ModelStore.generations(spark, name).isEmpty)
+    val root = new org.apache.hadoop.fs.Path(ModelStore.root(spark, name))
+    assert(!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root),
+      s"$root left behind")
+  }
+
+  test("build + serve create no catalog table") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "source", "text")
+    def tables() = spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables()
+    Sampling.buildCurationModels(spark, docs, "curnocat", dim = 64)
+    try {
+      Sampling.serveCuration(spark, docs, "curnocat", quota = 10).collect()
+      assert(tables() == before)
+    } finally ModelStore.drop(spark, Sampling.storeName("curnocat"))
+  }
+
+  test("a build whose calibration fails leaves the previous generation serving") {
+    import spark.implicits._
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "source", "text")
+    val name = Sampling.storeName("curtorn")
+    Sampling.buildCurationModels(spark, docs, "curtorn", dim = 64)
+    try {
+      val gen1 = ModelStore.current(spark, name)
+      def served() = Sampling.serveCuration(spark, docs, "curtorn", quota = 10)
+        .collect().map(_.toString).sorted.toSeq
+      val before = served()
+      assert(before.nonEmpty)
+      // both classes train, but no document has two tokens: the LM band is
+      // empty and the perplexity threshold has no value
+      val oneWord = Seq((1L, "src0", "alpha"), (2L, "src0", "beta"),
+        (3L, "src7", "gamma"), (4L, "src7", "delta")).toDF("doc_id", "source", "text")
+      val e = intercept[IllegalArgumentException](
+        Sampling.buildCurationModels(spark, oneWord, "curtorn", dim = 64))
+      assert(e.getMessage.contains("calibration"), e.getMessage)
+      assert(ModelStore.current(spark, name) == gen1)
+      assert(served() == before)
+    } finally ModelStore.drop(spark, name)
   }
 
   test("serve scores a batch the models never saw, from tables alone") {
@@ -46,13 +84,12 @@ class CurationServedSpec extends AnyFunSuite {
       byLang.values.foreach(g => assert(g.length <= 10))
       rows.foreach(r => assert(r.getLong(0) % 2 == 1))
       // thresholds came from the stored calibration, not the batch: the
-      // calib table carries exactly tau_c and tau_p
-      val cal = spark.table(Sampling.calibTable("curtest"))
+      // generation's calibration part carries exactly tau_c and tau_p
+      val cal = spark.read.parquet(
+          ModelStore.current(spark, Sampling.storeName("curtest")).partPath("cal"))
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
       assert(cal.keySet == Set("tau_c", "tau_p"))
-    } finally Seq(QualityClassifier.modelTable("curtest"),
-      LanguageModel.modelTable("curtest"), Sampling.calibTable("curtest"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    } finally ModelStore.drop(spark, Sampling.storeName("curtest"))
   }
 
   test("LanguageModel persist/load round-trips the exact counts") {
@@ -71,38 +108,17 @@ class CurationServedSpec extends AnyFunSuite {
       val a = LanguageModel.scoreWith(docs, l12, l1, lv).collect().map(_.toString).sorted
       val b = LanguageModel.scoreOn(docs, docs).collect().map(_.toString).sorted
       assert(a.sameElements(b))
-    } finally spark.sql(s"DROP TABLE IF EXISTS ${LanguageModel.modelTable("lmtest")}")
+    } finally ModelStore.drop(spark, LanguageModel.storeName("lmtest"))
   }
 
   test("torn LM model table loads loudly") {
     import spark.implicits._
-    Seq(("c12", "a", "b", 1L)).toDF("kind", "w1", "w2", "n")
-      .write.mode("overwrite").saveAsTable(LanguageModel.modelTable("lmtorn"))
+    val name = LanguageModel.storeName("lmtorn")
+    ModelStore.publish(spark, name)(ModelStore.write(_, "lm",
+      Seq(("c12", "a", "b", 1L)).toDF("kind", "w1", "w2", "n")))
     try {
       val e = intercept[IllegalArgumentException](LanguageModel.load(spark, "lmtorn"))
       assert(e.getMessage.contains("torn"))
-    } finally spark.sql(s"DROP TABLE IF EXISTS ${LanguageModel.modelTable("lmtorn")}")
-  }
-
-  test("orphan reconciliation deletes marker-bearing dirs, refuses foreign ones") {
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val fs = new org.apache.hadoop.fs.Path(warehouse)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // marker-bearing orphan: reconciled silently
-    val marked = new org.apache.hadoop.fs.Path(s"$warehouse/orphan_marked")
-    fs.mkdirs(marked)
-    fs.create(new org.apache.hadoop.fs.Path(marked, WarehouseTables.MarkerFile), true).close()
-    WarehouseTables.reconcileOrphan(spark, "orphan_marked")
-    assert(!fs.exists(marked))
-    // markerless non-empty orphan: loud refusal, data untouched
-    val foreign = new org.apache.hadoop.fs.Path(s"$warehouse/orphan_foreign")
-    fs.mkdirs(foreign)
-    val payload = new org.apache.hadoop.fs.Path(foreign, "data.parquet")
-    fs.create(payload, true).close()
-    val e = intercept[IllegalArgumentException](
-      WarehouseTables.reconcileOrphan(spark, "orphan_foreign"))
-    assert(e.getMessage.contains("remove the directory manually"))
-    assert(fs.exists(payload))
-    fs.delete(foreign, true)
+    } finally ModelStore.drop(spark, name)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.QualityClassifier
+import graft.operators.{ModelStore, QualityClassifier}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -161,18 +161,16 @@ class QualityClassifierSpec extends AnyFunSuite {
       val loaded = QualityClassifier.score(labeled, m2, t2, d2)
         .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
       assert(direct == loaded, "loaded-model scores drifted")
-      // torn table: drop the prior row → load must refuse
-      spark.table(QualityClassifier.modelTable(tag))
+      // torn generation: the stored rows minus the prior row → load must refuse
+      val name = QualityClassifier.storeName(tag)
+      val stored = spark.read.parquet(ModelStore.current(spark, name).partPath("qc"))
         .filter(col("kind") =!= "prior")
-        .write.mode("overwrite").saveAsTable(QualityClassifier.modelTable(tag) + "_torn")
-      spark.sql(s"DROP TABLE ${QualityClassifier.modelTable(tag)}")
-      spark.sql(s"ALTER TABLE ${QualityClassifier.modelTable(tag)}_torn " +
-        s"RENAME TO ${QualityClassifier.modelTable(tag)}")
+      ModelStore.publish(spark, name)(ModelStore.write(_, "qc", stored))
       val e = intercept[IllegalArgumentException] {
         QualityClassifier.load(spark, tag)
       }
       assert(e.getMessage.contains("prior"))
-    } finally spark.sql(s"DROP TABLE IF EXISTS ${QualityClassifier.modelTable(tag)}")
+    } finally ModelStore.drop(spark, QualityClassifier.storeName(tag))
   }
 
   test("plan: model and totals join as broadcasts — no sort-merge on feat") {
