@@ -371,8 +371,8 @@ object SparkEntry {
       ImiIndex.build(e, idxDir, "q_imiidx", k1 = 8)
       ImiIndex.search(s, "q_imiidx", e.filter(col("vec_id") < 50), nprobe = 4)
     }),
-    // the ROTATED persistent IMI: build stores the seed as a table
-    // property, search rotates the queries to match — the deployed form
+    // the ROTATED persistent IMI: build commits the seed with the
+    // half-models, search rotates the queries to match — the deployed form
     // of the correlated-halves defense; oracle is searchRotSql through
     // the stored bucket-pruned path
     "q_imi_indexed_rot" -> ((s, dir) => {

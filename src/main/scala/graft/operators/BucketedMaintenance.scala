@@ -54,29 +54,6 @@ object BucketedMaintenance {
       .bucketSpec.map(_.numBuckets).getOrElse(
         throw new IllegalStateException(s"$table is not bucketed"))
 
-  /** Per-JVM cache of a driver-side load keyed by the catalog entry's
-    * (location, createTime) — the shared versioning discipline of both
-    * index model caches (and [[IndexCanary]]'s verdict cache): the cached
-    * tables are immutable between build/rebuild, and build/rebuild
-    * RECREATE the catalog entry, so staleness detection is one metadata
-    * read with no data I/O. On a version miss the table's cached file
-    * listing is refreshed before `loader` runs — a rebuild may have come
-    * from another session (CrossSessionIndexSpec). */
-  private val versioned =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Any)]()
-
-  def cachedByVersion[T](spark: SparkSession, table: String)(loader: => T): T = {
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val version = s"${meta.location}#${meta.createTime}"
-    val hit = versioned.get(table)
-    if (hit != null && hit._1 == version) return hit._2.asInstanceOf[T]
-    spark.catalog.refreshTable(table)
-    val v = loader
-    versioned.put(table, (version, v))
-    v
-  }
-
   private def parquetFileSet(fs: org.apache.hadoop.fs.FileSystem,
                              p: org.apache.hadoop.fs.Path): Set[String] = {
     val b = Set.newBuilder[String]

@@ -940,7 +940,7 @@ ORDER BY f.doc_id
   def semanticDedupIndexed(spark: SparkSession, tag: String,
                            threshold: Double = 0.8,
                            ordered: Boolean = true): DataFrame = {
-    IndexCanary.check(spark, IvfIndex.modelTable(tag), IvfIndex.assignTable(tag))
+    IndexCanary.check(spark, IvfIndex.assignTable(tag))
     spark.catalog.refreshTable(IvfIndex.assignTable(tag))
     semanticVerdict(
       spark.table(IvfIndex.assignTable(tag))
@@ -1038,7 +1038,7 @@ WITH ${Similarity.centroidCtes(nCentroids, dim, iters)}, dist AS (
   def semanticDedupImi(spark: SparkSession, tag: String,
                        threshold: Double = 0.8,
                        ordered: Boolean = true): DataFrame = {
-    IndexCanary.check(spark, ImiIndex.modelTable(tag), ImiIndex.assignTable(tag))
+    IndexCanary.check(spark, ImiIndex.assignTable(tag))
     spark.catalog.refreshTable(ImiIndex.assignTable(tag))
     semanticVerdict(
       spark.table(ImiIndex.assignTable(tag))

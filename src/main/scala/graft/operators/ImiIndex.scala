@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persistent inverted multi-index — [[Imi]]'s product-cell quantizer in
   * [[IvfIndex]]'s deployment shape, making the composability the Imi
@@ -10,9 +11,10 @@ import org.apache.spark.sql.functions._
   * retrain, same census/compact maintenance cadence.
   *
   *  - `build` trains the TWO half-space quantizers ([[Imi.models]] —
-  *    residue seed, the oracle discipline) once, persists them as one
-  *    tiny model table keyed by (side, cid), and writes the assignment
-  *    relation `(vec_id, cell_id, embedding)` BUCKETED BY `cell_id`.
+  *    residue seed, the oracle discipline) once, commits them with the
+  *    rotation seed as one [[ModelStore]] generation ([[storeName]]), and
+  *    writes the assignment relation `(vec_id, cell_id, embedding)`
+  *    BUCKETED BY `cell_id`.
   *  - `search` ranks product cells per query with the multi-sequence
   *    walk ([[Imi.rankCellsWalk]] — 2·k1 half-distances rank k1² cells
   *    lazily), then reads ONLY the probed cells' buckets: the literal
@@ -28,38 +30,29 @@ import org.apache.spark.sql.functions._
   * [[Imi.searchSql]]'s oracle through this stored path. */
 object ImiIndex {
 
-  def modelTable(tag: String): String = s"${tag}_imimodel"
+  /** [[ModelStore]] name of the half-models built under `tag`. */
+  def storeName(tag: String): String = s"${tag}_imimodel"
   def assignTable(tag: String): String = s"${tag}_imiassign"
 
-  /** The half-decorrelating rotation seed (see [[Imi.rotateP]] — the
-    * adversarially-correlated-halves defense) is stored as a DATA row of
-    * the model table (`side = "s"`, centroid = [seed]), written in the
-    * SAME `saveAsTable` that creates the centroid rows — so a model table
-    * can never exist without the seed of the space it was trained in.
-    * (Round-8 stored it as a TBLPROPERTY stamped by a second DDL after
-    * the write; a crash — or a reader — between the two left a rotated
-    * assignment next to an unrotated-looking model, and searches silently
-    * skipped query rotation. Advisor r8.) 0 / absent row = unrotated;
-    * the row filters out of [[loadModels]]'s l/r sides, so the schema and
-    * [[IndexCanary]] shapes are untouched. */
+  /** A generation's one part: `(side, cid, centroid)` rows for the l/r
+    * half-models, plus the half-decorrelating rotation seed (see
+    * [[Imi.rotateP]] — the adversarially-correlated-halves defense) as a
+    * DATA row of its own (`side = "s"`, centroid = [seed]). The seed is
+    * written in the same part as the centroids, so a generation can never
+    * exist without the seed of the space it was trained in. No seed row =
+    * unrotated. */
+  private val Part = "halves"
+  private val PartSchema = new StructType()
+    .add("side", "string").add("cid", "int").add("centroid", "array<double>")
   private val SeedSide = "s"
 
-  /** Pre-round-9 seed storage: a model-table TBLPROPERTY stamped by a
-    * second DDL after the write. [[loadModelsAndSeed]] falls back to it
-    * when no seed ROW exists, so a rotated index persisted by the old
-    * code keeps rotating its queries instead of silently reading seed 0
-    * (advisor r9 — the exact silent-wrong-search failure the seed-row
-    * rework targeted). New builds never write the property; the first
-    * [[rebuildIfNeeded]] retrain migrates the seed into a data row. */
-  val LegacyRotSeedProp = "graft.imi.rot_seed"
-
   def rotSeedOf(spark: SparkSession, tag: String): Long =
-    loadModelsAndSeed(spark, tag)._3
+    loadModel(spark, tag).rotSeed
 
   /** Train + persist. `k1 = 0` → [[Imi.k1For]] auto rule (k1² product
     * cells track cellsFor's √n target). `rotSeed != 0` applies the seeded
     * Hadamard-sign rotation ahead of the half-split and records the seed
-    * in the model table: the assignment stores ROTATED vectors (cosines
+    * in the model generation: the assignment stores ROTATED vectors (cosines
     * are rotation-invariant, so search semantics are unchanged) and
     * search/append rotate their inputs to match. `preRotated = true`
     * (the rebuild path) declares `corpus` ALREADY in the seed's rotated
@@ -98,18 +91,17 @@ object ImiIndex {
         org.apache.spark.sql.graft.CheckpointShim.freeCheckpoint(trainBase)
     // model + assignment writes are independent (both derive from the
     // driver-side half-models) — overlap them (r15 opt, the
-    // IvfIndex.build shape; the held tag lease serializes other writers)
+    // IvfIndex.build shape; the generation commits after both succeeded,
+    // and the held tag lease serializes other writers)
+    val g = ModelStore.stage(spark, storeName(tag))
     Jobs.concurrently(Seq(
       () => {
-        BucketedMaintenance.dropWithFiles(spark, modelTable(tag))
         val modelRows =
           cl.zipWithIndex.map { case (c, cid) => ("l", cid, c) } ++
             cr.zipWithIndex.map { case (c, cid) => ("r", cid, c) } ++
             (if (rotSeed != 0) Seq((SeedSide, 0, Array(rotSeed.toDouble))) else Seq.empty)
-        modelRows.toSeq.toDF("side", "cid", "centroid")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("path", s"$path/${modelTable(tag)}")
-          .saveAsTable(modelTable(tag))
+        ModelStore.write(g, Part,
+          modelRows.toSeq.toDF("side", "cid", "centroid").coalesce(1))
       },
       () => {
         // nrm precomputed at write time — same scoring-stage rationale as
@@ -123,25 +115,24 @@ object ImiIndex {
           .option("path", s"$path/${assignTable(tag)}")
           .saveAsTable(assignTable(tag))
       }))
-    ()
+    ModelStore.commit(spark, g)
   }
 
   /** Assign new vectors into the EXISTING half-models (no retrain) and
     * append bucketed — the [[IvfIndex.assignInto]] analog, writing
-    * through the catalog so it follows a compacted table's location. */
-  /** `buckets = 0` (the default) follows the STORED table's bucket spec
+    * through the catalog so it follows a compacted table's location.
+    * `buckets = 0` (the default) follows the STORED table's bucket spec
     * — see [[IvfIndex.assignInto]]. */
   def assignInto(spark: SparkSession, tag: String,
                  newVecs: DataFrame, buckets: Int = 0): Unit =
       LeaseLock.withTableLock(spark, tag) {
     import spark.implicits._
-    IndexCanary.check(spark, modelTable(tag), assignTable(tag))
+    IndexCanary.check(spark, assignTable(tag))
     val bk = if (buckets == 0)
       BucketedMaintenance.storedBuckets(spark, assignTable(tag)) else buckets
-    val (cl, cr) = loadModels(spark, tag)
+    val Model(cl, cr, seed) = loadModel(spark, tag)
     val kk = cl.length
     // rotate into the index's stored space when the model carries a seed
-    val seed = rotSeedOf(spark, tag)
     val inVecs = if (seed != 0)
       Imi.rotated(newVecs.select(col("vec_id"), col("embedding")), seed)
     else newVecs
@@ -163,23 +154,22 @@ object ImiIndex {
   }
 
   /** Retrain when the corpus outgrows k1 — [[IvfIndex.rebuildIfNeeded]]'s
-    * census (two tiny counts), gating on [[Imi.k1For]] of the stored
-    * count vs the stored model's k1. Returns true iff a rebuild ran. */
+    * census (one tiny count), gating on [[Imi.k1For]] of the stored
+    * count vs the loaded model's k1. Returns true iff a rebuild ran. */
   def rebuildIfNeeded(spark: SparkSession, tag: String, path: String,
                       buckets: Int = 0, growthFactor: Double = 2.0,
                       iters: Int = Similarity.LloydIters): Boolean = {
     spark.catalog.refreshTable(assignTable(tag))
-    spark.catalog.refreshTable(modelTable(tag))
     val n = spark.table(assignTable(tag)).count()
-    val haveK1 = spark.table(modelTable(tag)).filter(col("side") === "l").count()
-    if (n > 0 && Imi.k1For(n) >= growthFactor * haveK1) {
+    val model = loadModel(spark, tag)
+    if (n > 0 && Imi.k1For(n) >= growthFactor * model.cl.length) {
       // preserve the stored physical layout across retrains — and the
       // rotation: the stored vectors are ALREADY in rotated space, so the
       // rebuild trains on them as-is (preRotated — no double rotation)
-      // while the seed is recorded in the same write that creates the new
-      // model table, so no reader window ever sees a rotated assignment
-      // under an unrotated-looking model
-      val seed = rotSeedOf(spark, tag)
+      // while the seed is committed in the same generation as the new
+      // half-models, so no reader ever sees a rotated assignment under an
+      // unrotated-looking model
+      val seed = model.rotSeed
       val bk = if (buckets == 0)
         BucketedMaintenance.storedBuckets(spark, assignTable(tag)) else buckets
       val corpus = org.apache.spark.sql.graft.CheckpointShim.statsHonestLocalCheckpoint(
@@ -200,39 +190,29 @@ object ImiIndex {
   def fileCount(spark: SparkSession, tag: String): Long =
     BucketedMaintenance.fileCount(spark, Seq(assignTable(tag)))
 
-  /** Driver-side half-quantizer models + rotation seed, cached per JVM via
-    * [[BucketedMaintenance.cachedByVersion]] — ONE versioned read serves
-    * both the centroids and the seed, so they can never disagree about
-    * which model generation they describe. */
-  private def loadModelsAndSeed(spark: SparkSession, tag: String)
-  : (Array[Array[Double]], Array[Array[Double]], Long) =
-    BucketedMaintenance.cachedByVersion(spark, modelTable(tag)) {
-      val rows = spark.table(modelTable(tag))
-        .select("side", "cid", "centroid").collect()
+  /** One model generation: the l/r half-quantizers (indexed by cid) and
+    * the rotation seed (0 = unrotated). */
+  private[graft] final case class Model(cl: Array[Array[Double]],
+                                        cr: Array[Array[Double]], rotSeed: Long)
+
+  /** The newest committed model generation of `tag`, cached per JVM by
+    * generation id — ONE read serves both the half-models and the seed,
+    * so they can never disagree about which build they describe. */
+  private[graft] def loadModel(spark: SparkSession, tag: String): Model =
+    ModelStore.load(spark, storeName(tag), Part) { g =>
+      val rows = g.read(spark, Part, PartSchema).collect()
         .map(r => (r.getString(0), r.getInt(1), r.getSeq[Double](2).toArray))
       def side(s: String): Array[Array[Double]] = {
         val picked = rows.filter(_._1 == s)
         val cents = new Array[Array[Double]](picked.length)
         picked.foreach { case (_, cid, c) => cents(cid) = c }
         require(cents.nonEmpty && cents.forall(_ != null),
-          s"model table ${modelTable(tag)} side '$s' has gaps in cid space")
+          s"${g.partPath(Part)} side '$s' has gaps in cid space")
         cents
       }
-      // seed row first; else the legacy TBLPROPERTY (pre-seed-row tables,
-      // where the property WAS the contract and a completed stamp is
-      // authoritative); else unrotated
-      val seed = rows.find(_._1 == SeedSide).map(_._3(0).toLong).getOrElse(
-        spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(modelTable(tag)))
-          .properties.get(LegacyRotSeedProp).map(_.toLong).getOrElse(0L))
-      (side("l"), side("r"), seed)
+      Model(side("l"), side("r"),
+        rows.find(_._1 == SeedSide).map(_._3(0).toLong).getOrElse(0L))
     }
-
-  private def loadModels(spark: SparkSession, tag: String)
-  : (Array[Array[Double]], Array[Array[Double]]) = {
-    val (cl, cr, _) = loadModelsAndSeed(spark, tag)
-    (cl, cr)
-  }
 
   /** Top-k cosine neighbors for `queries` against the stored corpus.
     * Output contract = [[Imi.search]]: `(query_id, rk, neighbor_id, cos)`.
@@ -244,14 +224,13 @@ object ImiIndex {
   def search(spark: SparkSession, tag: String, queries: DataFrame,
              nprobe: Int = 0, k: Int = 5, excludeSelf: Boolean = true): DataFrame = {
     import spark.implicits._
-    IndexCanary.check(spark, modelTable(tag), assignTable(tag))
-    val (cl, cr) = loadModels(spark, tag)
+    IndexCanary.check(spark, assignTable(tag))
+    val Model(cl, cr, seed) = loadModel(spark, tag)
     val kk = cl.length
     val np = if (nprobe == 0) Similarity.nprobeFor(kk * kk) else nprobe
     spark.catalog.refreshTable(assignTable(tag)) // cross-session appends
     // rotate queries into the index's stored space when the model carries
     // a seed (cosines are rotation-invariant — output semantics unchanged)
-    val seed = rotSeedOf(spark, tag)
     val inQueries = if (seed != 0)
       Imi.rotated(queries.select(col("vec_id"), col("embedding")), seed)
     else queries

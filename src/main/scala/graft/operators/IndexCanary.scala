@@ -25,49 +25,41 @@ import org.apache.spark.sql.catalyst.TableIdentifier
   * with the table/field/expected/found spelled out IS the good outcome.
   *
   * Cost: `getTableMetadata` is an in-memory catalog read (no file
-  * listing); verdicts are additionally cached per (location, createTime) —
-  * the same immutability key as the model caches — so a streaming gate
-  * calling search per micro-batch re-verifies only after a build/rebuild
-  * recreates the table.
+  * listing); verdicts are additionally cached per (location, createTime),
+  * so a streaming gate calling search per micro-batch re-verifies only
+  * after a build/rebuild recreates the table.
+  *
+  * Scope: the BUCKETED index tables. Index models are [[ModelStore]]
+  * generations, written and read with a fixed schema per part.
   */
 object IndexCanary {
 
   /** Expected physical contract of one index table: column name →
     * catalog type string (as `DataType.catalogString` prints it), plus
-    * the bucket column for bucketed tables (None = unbucketed model
-    * table). Bucket COUNT is layout-tunable (build's `buckets` param), so
-    * the canary pins the column and requires a positive count rather than
-    * a magic 8 — an append with a mismatched count is already rejected by
-    * Spark against the catalog's spec. */
-  /** `optional` columns are TIER columns (e.g. the PQ code leg): absent on
-    * an index built without the tier, but if present they must match the
-    * pinned type — a drifted optional column is still drift. */
-  final case class Shape(cols: Seq[(String, String)], bucketCol: Option[String],
+    * the bucket column. Bucket COUNT is layout-tunable (build's `buckets`
+    * param), so the canary pins the column and requires a positive count
+    * rather than a magic 8 — an append with a mismatched count is already
+    * rejected by Spark against the catalog's spec. `optional` columns are
+    * TIER columns (e.g. the PQ code leg): absent on an index built without
+    * the tier, but if present they must match the pinned type — a drifted
+    * optional column is still drift. */
+  final case class Shape(cols: Seq[(String, String)], bucketCol: String,
                          optional: Seq[(String, String)] = Nil)
 
   /** Keyed by table-name SUFFIX — the naming contract of
     * [[ShingleIndex]]/[[IvfIndex]]/[[ImiIndex]] (`<tag>_occ`, …). */
   val shapes: Map[String, Shape] = Map(
-    "_occ" -> Shape(Seq("key" -> "bigint", "corpus_id" -> "bigint"), Some("key")),
-    "_sizes" -> Shape(Seq("corpus_id" -> "bigint", "nc" -> "bigint"), Some("corpus_id")),
-    "_fp" -> Shape(Seq("fp" -> "string"), Some("fp")),
-    "_sat" -> Shape(Seq("key" -> "bigint"), Some("key")),
-    "_ivfmodel" -> Shape(Seq("cid" -> "int", "centroid" -> "array<double>"), None),
-    "_pqmodel" -> Shape(
-      Seq("m" -> "int", "cid" -> "int", "centroid" -> "array<double>",
-        "msub" -> "int", "ksub" -> "int", "rot_seed" -> "bigint"), None,
-      // absent on pre-residual-tier tables (reads as raw codes — the
-      // legacy posture [[IvfIndex.loadPqModel]] documents)
-      optional = Seq("residual" -> "boolean")),
+    "_occ" -> Shape(Seq("key" -> "bigint", "corpus_id" -> "bigint"), "key"),
+    "_sizes" -> Shape(Seq("corpus_id" -> "bigint", "nc" -> "bigint"), "corpus_id"),
+    "_fp" -> Shape(Seq("fp" -> "string"), "fp"),
+    "_sat" -> Shape(Seq("key" -> "bigint"), "key"),
     "_ivfassign" -> Shape(
       Seq("vec_id" -> "bigint", "cid" -> "int", "embedding" -> "array<float>",
-        "nrm" -> "double", "qvec" -> "binary", "qnrm" -> "double"), Some("cid"),
+        "nrm" -> "double", "qvec" -> "binary", "qnrm" -> "double"), "cid",
       optional = Seq("pqcode" -> "binary")),
-    "_imimodel" -> Shape(
-      Seq("side" -> "string", "cid" -> "int", "centroid" -> "array<double>"), None),
     "_imiassign" -> Shape(
       Seq("vec_id" -> "bigint", "cell_id" -> "bigint", "embedding" -> "array<float>",
-        "nrm" -> "double"), Some("cell_id")))
+        "nrm" -> "double"), "cell_id"))
 
   /** table name → verified catalog version (location#createTime). */
   private val okCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -110,20 +102,15 @@ object IndexCanary {
             .toSeq.sorted.foreach { extra =>
               violations += s"column `$extra`: UNEXPECTED (found ${found(extra)})"
             }
-          shape.bucketCol match {
-            case Some(bc) => meta.bucketSpec match {
-              case None => violations += s"bucket spec: MISSING (expected bucketed by `$bc`)"
-              case Some(bs) =>
-                if (bs.bucketColumnNames != Seq(bc))
-                  violations += s"bucket column: expected `$bc`, " +
-                    s"found `${bs.bucketColumnNames.mkString(",")}`"
-                if (bs.numBuckets <= 0)
-                  violations += s"bucket count: expected > 0, found ${bs.numBuckets}"
-            }
-            case None => meta.bucketSpec.foreach { bs =>
-              violations += "bucket spec: UNEXPECTED (model tables are unbucketed), " +
-                s"found ${bs.numBuckets} buckets by `${bs.bucketColumnNames.mkString(",")}`"
-            }
+          val bc = shape.bucketCol
+          meta.bucketSpec match {
+            case None => violations += s"bucket spec: MISSING (expected bucketed by `$bc`)"
+            case Some(bs) =>
+              if (bs.bucketColumnNames != Seq(bc))
+                violations += s"bucket column: expected `$bc`, " +
+                  s"found `${bs.bucketColumnNames.mkString(",")}`"
+              if (bs.numBuckets <= 0)
+                violations += s"bucket count: expected > 0, found ${bs.numBuckets}"
           }
           val v = violations.result()
           if (v.nonEmpty) throw new IllegalStateException(

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persistent IVF index — build once, search per query batch: the ANN
   * counterpart of [[ShingleIndex]] (same build/probe cost split, same
@@ -11,8 +12,10 @@ import org.apache.spark.sql.functions._
   * assignment relation is bucketed by cid so the probe join co-locates").
   *
   *  - `build` trains the centroid model ([[Similarity.trainedCentroidArrays]]
-  *    — one broadcast-model scan per Lloyd round) ONCE, persists it as a
-  *    tiny model table, and writes the assignment relation
+  *    — one broadcast-model scan per Lloyd round) ONCE, commits it as one
+  *    [[ModelStore]] generation ([[storeName]]: a `centroids` part, plus a
+  *    `pq` part with the codebooks and their spec when the index carries
+  *    the PQ tier), and writes the assignment relation
   *    `(vec_id, cid, embedding)` BUCKETED BY `cid`: every vector stored
   *    with its cell, vectors of one cell co-located in one bucket.
   *  - `search` ranks cells per query against the loaded model (narrow
@@ -23,20 +26,33 @@ import org.apache.spark.sql.functions._
   *    row is decoded. Candidates carry their vectors out of the scan (no
   *    re-join with the corpus for the score).
   *
+  * Centroids and codebooks come from ONE generation in one cached load
+  * ([[loadModel]]), so they always describe the same build; a rebuild
+  * without the tier commits a generation with no `pq` part.
+  *
   * Semantics are EXACTLY [[Similarity.ivfSearch]]'s for the same
   * (cells, seed, iters, nprobe, k) — same distance/tie-break/rounding
   * discipline — pinned by IvfIndexSpec equality and by `q_ivf_indexed`,
   * which runs [[Similarity.ivfSearchSql]]'s oracle through this stored
   * path. Vectors added after `build` get correct cells via `assignInto`
-  * (the model does NOT retrain — standard IVF practice; retrain = rebuild,
-  * the [[ShingleIndex.rebuildIfNeeded]] analog would gate on assignment
-  * drift, out of scope here).
+  * (the model does NOT retrain — standard IVF practice; retrain = rebuild
+  * via [[rebuildIfNeeded]]).
   */
 object IvfIndex {
 
-  def modelTable(tag: String): String = s"${tag}_ivfmodel"
+  /** [[ModelStore]] name of the model built under `tag`. */
+  def storeName(tag: String): String = s"${tag}_ivfmodel"
   def assignTable(tag: String): String = s"${tag}_ivfassign"
-  def pqModelTable(tag: String): String = s"${tag}_pqmodel"
+
+  /** The parts of a model generation. */
+  private val CentroidPart = "centroids"
+  private val PqPart = "pq"
+  private val CentroidSchema = new StructType()
+    .add("cid", "int").add("centroid", "array<double>")
+  private val PqSchema = new StructType()
+    .add("m", "int").add("cid", "int").add("centroid", "array<double>")
+    .add("msub", "int").add("ksub", "int").add("rot_seed", "long")
+    .add("residual", "boolean")
 
   /** Train + persist. `nCentroids = 0` → [[Similarity.cellsFor]] auto rule
     * (farthest-point seed); explicit cells keep the oracle-parity residue
@@ -89,37 +105,26 @@ object IvfIndex {
         (c, b)
       } finally if (sampled)
         org.apache.spark.sql.graft.CheckpointShim.freeCheckpoint(trainBase)
-    // The three tables derive from driver-side state (cents/books) + base
-    // and are pairwise independent — drop+write each under its own thunk,
-    // overlapped (guide §2.6; the assignment write is the data-sized one,
-    // the two model writes back-fill its tail — r15 opt). The held tag
-    // lease already serializes against other writers.
+    // The model parts and the assignment table derive from driver-side
+    // state (cents/books) + base and are pairwise independent — each
+    // writes under its own thunk, overlapped (guide §2.6; the assignment
+    // write is the data-sized one, the model parts back-fill its tail —
+    // r15 opt). The generation commits only once every write succeeded;
+    // the held tag lease serializes against other writers.
+    val g = ModelStore.stage(spark, storeName(tag))
     Jobs.concurrently(Seq(
-      () => {
-        // canonical-path re-pin on rebuild: drop a possibly-compacted
-        // table (and its generation-dir files) before the Overwrite create
-        BucketedMaintenance.dropWithFiles(spark, modelTable(tag))
+      () => ModelStore.write(g, CentroidPart,
         cents.zipWithIndex.map { case (c, cid) => (cid, c) }.toSeq
-          .toDF("cid", "centroid")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .option("path", s"$path/${modelTable(tag)}")
-          .saveAsTable(modelTable(tag))
-      },
-      () => {
-        // the PQ model table is dropped unconditionally: a rebuild WITHOUT
-        // the tier must not leave a stale codebook that disagrees with the
-        // (code-free) assignment relation
-        BucketedMaintenance.dropWithFiles(spark, pqModelTable(tag))
-        (pqSpec, books) match {
-          case (Some(sp), Some(bk)) =>
-            val rows = for (mi <- 0 until sp.m; j <- 0 until sp.k)
-              yield (mi, j, bk(mi)(j), sp.m, sp.k, sp.rotSeed, sp.residual)
-            rows.toDF("m", "cid", "centroid", "msub", "ksub", "rot_seed", "residual")
-              .coalesce(1).write.mode(SaveMode.Overwrite)
-              .option("path", s"$path/${pqModelTable(tag)}")
-              .saveAsTable(pqModelTable(tag))
-          case _ =>
-        }
+          .toDF("cid", "centroid").coalesce(1)),
+      () => (pqSpec, books) match {
+        // no tier → no `pq` part: the generation itself says so
+        case (Some(sp), Some(bk)) =>
+          val rows = for (mi <- 0 until sp.m; j <- 0 until sp.k)
+            yield (mi, j, bk(mi)(j), sp.m, sp.k, sp.rotSeed, sp.residual)
+          ModelStore.write(g, PqPart, rows
+            .toDF("m", "cid", "centroid", "msub", "ksub", "rot_seed", "residual")
+            .coalesce(1))
+        case _ =>
       },
       () => {
         // nrm is precomputed at WRITE time: the scoring stage evaluates one
@@ -133,13 +138,15 @@ object IvfIndex {
         val assigned = assignedFrame(base, cents,
           books.map(bk => PqEnc(bk, pqSpec.get.rotSeed.map(Imi.rotSigns(_)),
             pqSpec.get.residual)))
+        // canonical-path re-pin on rebuild: drop a possibly-compacted
+        // table (and its generation-dir files) before the Overwrite create
         BucketedMaintenance.dropWithFiles(spark, assignTable(tag))
         assigned.write.mode(SaveMode.Overwrite).format("parquet")
           .bucketBy(buckets, "cid").sortBy("cid")
           .option("path", s"$path/${assignTable(tag)}")
           .saveAsTable(assignTable(tag))
       }))
-    ()
+    ModelStore.commit(spark, g)
   }
 
   /** PQ encoding context: codebooks, rotation signs, and whether codes
@@ -189,10 +196,10 @@ object IvfIndex {
                  newVecs: DataFrame, buckets: Int = 0): Unit =
       LeaseLock.withTableLock(spark, tag) {
     import spark.implicits._
-    IndexCanary.check(spark, modelTable(tag), assignTable(tag))
+    IndexCanary.check(spark, assignTable(tag))
     val bk = if (buckets == 0)
       BucketedMaintenance.storedBuckets(spark, assignTable(tag)) else buckets
-    val cents = loadModel(spark, tag)
+    val model = loadModel(spark, tag)
     // append through the catalog location (no path pin): after a
     // [[compact]] the table lives in a generation dir and a pinned
     // original path analysis-errors on the mismatch. guardedAppend
@@ -210,13 +217,10 @@ object IvfIndex {
       spark, assignTable(tag), batchIds, "vec_id")
     // appended vectors get PQ codes iff the index carries the tier — the
     // stored codebook decides, so appends can never drift the schema
-    val pqOpt = if (spark.catalog.tableExists(pqModelTable(tag))) {
-      val pm = loadPqModel(spark, tag)
-      Some(PqEnc(pm.books, pm.signs, pm.residual))
-    } else None
+    val pqOpt = model.pq.map(pm => PqEnc(pm.books, pm.signs, pm.residual))
     BucketedMaintenance.guardedAppend(spark, Seq(assignTable(tag)),
       rowsPresent = Some(present)) {
-      assignedFrame(newVecs.select(col("vec_id"), col("embedding")), cents, pqOpt)
+      assignedFrame(newVecs.select(col("vec_id"), col("embedding")), model.cents, pqOpt)
         .write.mode(SaveMode.Append).format("parquet")
         .bucketBy(bk, "cid").sortBy("cid")
         .saveAsTable(assignTable(tag))
@@ -230,22 +234,22 @@ object IvfIndex {
     * count. Policy: retrain (with the auto √n rule and current default
     * seed) when [[Similarity.cellsFor]] of the stored count reaches
     * `growthFactor` × the stored model's cells — the [[ShingleIndex.rebuildIfNeeded]]
-    * analog, gated by a census that costs two tiny counts. Returns true
-    * iff a rebuild ran. The index contents are materialized (checkpoint)
-    * before the rebuild because build drops the table it would otherwise
-    * still be reading. */
+    * analog, gated by a census that costs one tiny count (the stored cell
+    * count and PQ spec come from the loaded model generation). Returns
+    * true iff a rebuild ran. The index contents are materialized
+    * (checkpoint) before the rebuild because build drops the table it
+    * would otherwise still be reading. */
   def rebuildIfNeeded(spark: SparkSession, tag: String, path: String,
                       buckets: Int = 0, growthFactor: Double = 2.0,
                       iters: Int = Similarity.LloydIters,
                       seed: Similarity.IvfSeed = Similarity.DefaultSeed): Boolean = {
-    // refresh both relations: the appends being censused typically come
-    // from streaming foreachBatch clones, invisible to this session's
-    // cached file listings otherwise
+    // refresh: the appends being censused typically come from streaming
+    // foreachBatch clones, invisible to this session's cached file
+    // listing otherwise
     spark.catalog.refreshTable(assignTable(tag))
-    spark.catalog.refreshTable(modelTable(tag))
     val n = spark.table(assignTable(tag)).count()
-    val have = spark.table(modelTable(tag)).count()
-    if (n > 0 && Similarity.cellsFor(n) >= growthFactor * have) {
+    val model = loadModel(spark, tag)
+    if (n > 0 && Similarity.cellsFor(n) >= growthFactor * model.cents.length) {
       // preserve the stored physical layout across retrains: a rebuild
       // must change the MODEL, never silently the bucket count
       val bk = if (buckets == 0)
@@ -255,15 +259,8 @@ object IvfIndex {
       // a rebuild preserves the stored PQ spec (an index that carried the
       // tier keeps it with the same m/k/rotation; one without it stays on
       // the auto rule)
-      val pqMode: Pq.PqMode = if (spark.catalog.tableExists(pqModelTable(tag))) {
-        val pm = loadPqModel(spark, tag)
-        val rot = spark.table(pqModelTable(tag)).select("rot_seed").head() match {
-          case r if r.isNullAt(0) => None
-          case r => Some(r.getLong(0))
-        }
-        Pq.PqSpec(pm.books.length, pm.kSub, rot, pm.residual)
-      } else Pq.PqAuto
-      build(corpus, path, tag, bk, nCentroids = 0, iters, seed, pqMode)
+      build(corpus, path, tag, bk, nCentroids = 0, iters, seed,
+        model.pq.map(_.spec).getOrElse(Pq.PqAuto))
       true
     } else false
   }
@@ -271,8 +268,8 @@ object IvfIndex {
   /** Compact the append-accreted assignment relation (each [[assignInto]]
     * adds a file per bucket; a long-running [[graft.streaming.VectorIngestGate]]
     * accretes one generation per micro-batch) — shared staged-swap
-    * mechanics, see [[BucketedMaintenance]]. The model table is tiny and
-    * overwrite-only; only the assignment needs it. */
+    * mechanics, see [[BucketedMaintenance]]. The model is a
+    * [[ModelStore]] generation; only the assignment needs it. */
   def compact(spark: SparkSession, tag: String, path: String): Unit =
     LeaseLock.withTableLock(spark, tag) {
       BucketedMaintenance.compact(spark, Seq((assignTable(tag), "cid")), path)
@@ -282,60 +279,51 @@ object IvfIndex {
   def fileCount(spark: SparkSession, tag: String): Long =
     BucketedMaintenance.fileCount(spark, Seq(assignTable(tag)))
 
-  /** Per-JVM model cache keyed by the catalog entry's (location,
-    * createTime): a batch gate calls search + assignInto every
-    * micro-batch, and re-collecting an IMMUTABLE model table per call was
+  /** Loaded PQ tier: codebooks (`m × k` centroids of `dim / m` doubles —
+    * 16 KB at the 8×256 default), rotation seed and the residual flag. */
+  private[graft] final case class PqModel(books: Array[Array[Array[Double]]],
+                                          rotSeed: Option[Long], residual: Boolean) {
+    def kSub: Int = books.head.length
+    val signs: Option[Array[Double]] = rotSeed.map(Imi.rotSigns(_))
+    /** The spec a rebuild needs to train the same tier again. */
+    def spec: Pq.PqSpec = Pq.PqSpec(books.length, kSub, rotSeed, residual)
+  }
+
+  /** One model generation: the coarse centroids (indexed by cid) and the
+    * PQ tier, when the index carries one. */
+  private[graft] final case class Model(cents: Array[Array[Double]], pq: Option[PqModel])
+
+  /** The newest committed model generation of `tag`, cached per JVM by
+    * generation id: a batch gate calls search + assignInto every
+    * micro-batch, and re-collecting the immutable model per call was
     * measured as a visible slice of the vector gate's batch wall
-    * (StreamBench r7 attribution). The model only changes via
-    * build/rebuild, which drop-and-recreate the table → new createTime,
-    * even from another session (shared external catalog), so staleness
-    * detection needs no file listing — one driver-side metadata read. */
-  /** Driver-side centroid model, cached per JVM via
-    * [[BucketedMaintenance.cachedByVersion]] (the model table only
-    * changes through build/rebuild, which recreate the catalog entry). */
-  private def loadModel(spark: SparkSession, tag: String): Array[Array[Double]] =
-    BucketedMaintenance.cachedByVersion(spark, modelTable(tag)) {
-      val rows = spark.table(modelTable(tag))
-        .select("cid", "centroid").collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      val cents = new Array[Array[Double]](rows.length)
-      rows.foreach { case (cid, c) => cents(cid) = c }
-      require(cents.forall(_ != null), s"model table ${modelTable(tag)} has gaps in cid space")
-      cents
-    }
+    * (StreamBench r7 attribution). A build or rebuild — from any session —
+    * commits a new generation id, so the next load misses. */
+  private[graft] def loadModel(spark: SparkSession, tag: String): Model =
+    ModelStore.load(spark, storeName(tag), "model")(readModel(spark, _))
 
-  /** Loaded PQ model: codebooks, rotation signs, per-subspace codebook
-    * size, and the residual flag. */
-  private final case class PqModel(books: Array[Array[Array[Double]]],
-                                   signs: Option[Array[Double]],
-                                   kSub: Int, residual: Boolean)
+  private def readModel(spark: SparkSession, g: ModelStore.Generation): Model = {
+    val rows = g.read(spark, CentroidPart, CentroidSchema).collect()
+    val cents = new Array[Array[Double]](rows.length)
+    rows.foreach(r => cents(r.getInt(0)) = r.getSeq[Double](1).toArray)
+    require(cents.nonEmpty && cents.forall(_ != null),
+      s"${g.partPath(CentroidPart)} has gaps in cid space")
+    val pqPath = new org.apache.hadoop.fs.Path(g.partPath(PqPart))
+    val hasPq = pqPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(pqPath)
+    Model(cents, if (hasPq) Some(readPq(spark, g)) else None)
+  }
 
-  /** Driver-side PQ codebooks + rotation signs + per-subspace codebook
-    * size, cached like the coarse model (the table is immutable outside
-    * build/rebuild). `m·k·dsub` doubles — 16 KB at the 8×256 default.
-    * Tables written before the residual tier existed lack the `residual`
-    * column → raw codes (the column's absence IS the legacy flag, same
-    * posture as the rotation-seed table property). */
-  private def loadPqModel(spark: SparkSession, tag: String): PqModel =
-    BucketedMaintenance.cachedByVersion(spark, pqModelTable(tag)) {
-      val t = spark.table(pqModelTable(tag))
-      val hasRes = t.schema.fieldNames.contains("residual")
-      val rows = (if (hasRes)
-          t.select(col("m"), col("cid"), col("centroid"), col("msub"),
-            col("ksub"), col("rot_seed"), col("residual"))
-        else
-          t.select(col("m"), col("cid"), col("centroid"), col("msub"),
-            col("ksub"), col("rot_seed"), lit(false).as("residual"))).collect()
-      require(rows.nonEmpty, s"PQ model table ${pqModelTable(tag)} is empty")
-      val m = rows.head.getInt(3)
-      val k = rows.head.getInt(4)
-      val rot = if (rows.head.isNullAt(5)) None else Some(rows.head.getLong(5))
-      val books = Array.ofDim[Array[Double]](m, k)
-      rows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-      require(books.forall(_.forall(_ != null)),
-        s"PQ model table ${pqModelTable(tag)} has gaps in (m, cid) space")
-      PqModel(books, rot.map(Imi.rotSigns(_)), k, rows.head.getBoolean(6))
-    }
+  private def readPq(spark: SparkSession, g: ModelStore.Generation): PqModel = {
+    val rows = g.read(spark, PqPart, PqSchema).collect()
+    require(rows.nonEmpty, s"${g.partPath(PqPart)} is empty")
+    val (m, k) = (rows.head.getInt(3), rows.head.getInt(4))
+    val rot = if (rows.head.isNullAt(5)) None else Some(rows.head.getLong(5))
+    val books = Array.ofDim[Array[Double]](m, k)
+    rows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
+    require(books.forall(_.forall(_ != null)),
+      s"${g.partPath(PqPart)} has gaps in (m, cid) space")
+    PqModel(books, rot, rows.head.getBoolean(6))
+  }
 
   /** Top-k cosine neighbors for `queries` (`vec_id`, `embedding`) against
     * the stored corpus. Output contract = [[Similarity.ivfSearch]]:
@@ -354,8 +342,8 @@ object IvfIndex {
   def search(spark: SparkSession, tag: String, queries: DataFrame,
              nprobe: Int = 0, k: Int = 5, excludeSelf: Boolean = true): DataFrame = {
     import spark.implicits._
-    IndexCanary.check(spark, modelTable(tag), assignTable(tag))
-    val cents = loadModel(spark, tag)
+    IndexCanary.check(spark, assignTable(tag))
+    val cents = loadModel(spark, tag).cents
     val np = if (nprobe == 0) Similarity.nprobeFor(cents.length) else nprobe
     spark.catalog.refreshTable(assignTable(tag)) // see cross-session appends
     // checkpointed: the cell-ranking kernel feeds BOTH the probed-cells
@@ -422,8 +410,8 @@ object IvfIndex {
   private def int8Stage(spark: SparkSession, tag: String, queries: DataFrame,
                         nprobe: Int, excludeSelf: Boolean): (DataFrame, DataFrame) = {
     import spark.implicits._
-    IndexCanary.check(spark, modelTable(tag), assignTable(tag))
-    val cents = loadModel(spark, tag)
+    IndexCanary.check(spark, assignTable(tag))
+    val cents = loadModel(spark, tag).cents
     val np = if (nprobe == 0) Similarity.nprobeFor(cents.length) else nprobe
     spark.catalog.refreshTable(assignTable(tag))
     val probes = org.apache.spark.sql.graft.CheckpointShim.statsHonestLocalCheckpoint(
@@ -549,8 +537,8 @@ object IvfIndex {
                      onRound: (Int, Long) => Unit = (_, _) => (),
                      window: Int = 1): DataFrame = {
     import spark.implicits._
-    IndexCanary.check(spark, modelTable(tag), assignTable(tag))
-    val cents = loadModel(spark, tag)
+    IndexCanary.check(spark, assignTable(tag))
+    val cents = loadModel(spark, tag).cents
     val step = if (chunk == 0) Similarity.nprobeFor(cents.length) else chunk
     val rounds = math.max(1, maxChunks)
     spark.catalog.refreshTable(assignTable(tag))
@@ -679,12 +667,11 @@ object IvfIndex {
   private def pqStage(spark: SparkSession, tag: String, queries: DataFrame,
                       nprobe: Int, excludeSelf: Boolean): (DataFrame, DataFrame) = {
     import spark.implicits._
-    IndexCanary.check(spark, modelTable(tag), assignTable(tag), pqModelTable(tag))
-    require(spark.catalog.tableExists(pqModelTable(tag)),
-      s"index `$tag` has no PQ tier (${pqModelTable(tag)} absent) — rebuild with " +
-        "pq = Pq.PqSpec(...) or let Pq.PqAuto engage at scale")
-    val cents = loadModel(spark, tag)
-    val pm = loadPqModel(spark, tag)
+    IndexCanary.check(spark, assignTable(tag))
+    val Model(cents, pqOpt) = loadModel(spark, tag)
+    val pm = pqOpt.getOrElse(throw new IllegalArgumentException(
+      s"index `$tag` has no PQ tier (its model generation has no `$PqPart` part) — " +
+        "rebuild with pq = Pq.PqSpec(...) or let Pq.PqAuto engage at scale"))
     val (books, signs) = (pm.books, pm.signs)
     val np = if (nprobe == 0) Similarity.nprobeFor(cents.length) else nprobe
     spark.catalog.refreshTable(assignTable(tag))

@@ -57,8 +57,10 @@ import org.apache.spark.sql.SparkSession
   * coordination) for the landing/segment shape, and driver-sized models
   * publish through [[ModelStore]] on the same protocol with no lease
   * (only read-modify-write [[BloomDedup.absorb]] still takes it, so no
-  * concurrent update is lost). The LEASE remains the supported regime
-  * for the bucketed persistent indexes — path-pinned catalog tables —
+  * concurrent update is lost); the IVF/PQ/IMI index models commit their
+  * generation inside the index build's lease. The LEASE remains the
+  * supported regime for the bucketed persistent index tables —
+  * path-pinned catalog tables —
   * deliberately: their value is bucket-PRUNED catalog scans, and
   * per-append manifest segments have no shared bucket layout to prune —
   * turning segments back into a pruned table is exactly the maintenance

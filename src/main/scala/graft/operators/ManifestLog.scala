@@ -52,14 +52,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * streaming ingestion zones, batch landing, receipt logs — and, through
   * [[ModelStore]] (one generation = one segment `gen-<n>`, same marker
   * and winner rule), for the DRIVER-SIZED models: NB classifier, bigram
-  * LM, curation thresholds, broadcast-tier Bloom filter. The bucketed
-  * persistent indexes ([[ShingleIndex]]/[[IvfIndex]]/[[ImiIndex]],
-  * [[BloomDedup.persistRelational]]) keep the other regime, path-pinned
-  * catalog tables under the lease: their value is bucket-PRUNED catalog
-  * scans, and a union of per-append manifest segments has no shared
-  * bucket layout for Spark to prune — making segments bucketed and compacting them into
-  * the canonical table is exactly the maintenance work the lease already
-  * serializes. Readers of a manifest log pay a full union scan; that is
+  * LM, curation thresholds, broadcast-tier Bloom filter, the IVF
+  * centroids and PQ codebooks, the IMI half-models. The bucketed
+  * persistent index tables ([[ShingleIndex]], the [[IvfIndex]] and
+  * [[ImiIndex]] assignment relations, [[BloomDedup.persistRelational]])
+  * keep the other regime, path-pinned catalog tables under the lease:
+  * their value is bucket-PRUNED catalog scans, and a union of per-append
+  * manifest segments has no shared bucket layout for Spark to prune —
+  * making segments bucketed and compacting them into the canonical table
+  * is exactly the maintenance work the lease already serializes. Readers of a manifest log pay a full union scan; that is
   * the landing shape's normal access pattern (read-the-batch,
   * read-everything-once), not an index probe. */
 object ManifestLog {

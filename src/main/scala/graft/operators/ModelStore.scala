@@ -5,8 +5,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Versioned store for DRIVER-SIZED models — the NB classifier, the bigram
-  * LM, the curation thresholds and the broadcast-tier Bloom filter. One
-  * publish/load mechanism, committed with [[ManifestLog]]'s protocol.
+  * LM, the curation thresholds, the broadcast-tier Bloom filter, the IVF
+  * centroids with their PQ codebooks ([[IvfIndex]]) and the IMI
+  * half-models with their rotation seed ([[ImiIndex]]). One publish/load
+  * mechanism, committed with [[ManifestLog]]'s protocol.
   *
   * Layout under `<spark.sql.warehouse.dir>/_graft_models/<name>/`:
   * {{{
@@ -34,10 +36,13 @@ import org.apache.spark.sql.types.StructType
   * any file whose name the store would not have written.
   *
   * Scope: models whose value is a whole-object load. Bucketed data indexes
-  * keep path-pinned catalog tables, because their value is bucket-pruned
-  * scans (the [[ManifestLog]] scope note). Publishing needs no lease;
-  * read-modify-write callers ([[BloomDedup.absorb]]) still serialize on
-  * [[LeaseLock]] so that no concurrent update is lost. */
+  * (including the IVF/IMI assignment relations) keep path-pinned catalog
+  * tables, because their value is bucket-pruned scans (the [[ManifestLog]]
+  * scope note). Publishing needs no lease; read-modify-write callers
+  * ([[BloomDedup.absorb]]) still serialize on [[LeaseLock]] so that no
+  * concurrent update is lost, and the index builds stage and commit their
+  * generation inside the lease they already hold for the assignment
+  * table. */
 object ModelStore {
 
   private val IdPattern = "gen-(\\d+)__[0-9a-f]{32}".r

@@ -36,8 +36,8 @@ import org.apache.spark.sql.functions._
   * exact per-block maxima; the unseen tail is bounded by their
   * distribution and the margin is reported with every estimate).
   *
-  * Validation contract (RecallEstimatorSpec + DeepScaleProbe `plant`
-  * tier): at sub-cap scale, (a) the margin is positive, (b) exact
+  * Validation contract (RecallEstimatorSpec + DeepScaleProbe's `plant`
+  * tier, last at commit d988a61): at sub-cap scale, (a) the margin is positive, (b) exact
   * brute-force top-k over the planted corpus per query IS the planted
   * set, and (c) index recall measured against exact truth equals recall
   * measured against the planted set — the estimator is then applied at
@@ -180,8 +180,8 @@ object RecallEstimator {
     * ([[graft.tools.ScaleProbe.generateEmbeddings]] multiplies dim i ∈
     * 1..D by sign(b, i)); a 0-based caller would probe a DIFFERENT
     * corpus than the one on disk, which is exactly what the under-cap
-    * quadratic validation leg in DeepScaleProbe exists to catch (and
-    * did, round 10). */
+    * quadratic validation leg in DeepScaleProbe (last at commit d988a61)
+    * existed to catch (and did, round 10). */
   def blockStratumTopK(base: DataFrame, queryIds: Seq[Long], blocks: Int,
                        blockStride: Long, k: Int,
                        maskOf: (Int, Int) => Float): Map[Long, Seq[(Long, Double)]] = {

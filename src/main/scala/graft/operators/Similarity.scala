@@ -498,7 +498,8 @@ FROM scored WHERE cos >= $threshold ORDER BY id_a, id_b
     * `⌈2·√cells⌉` (floored at 8, capped at cells) holds measured recall@5
     * in a ≥0.55 band across FIVE scale points spanning three decades
     * (0.72 / 0.63 / 0.60 / 0.62 / 0.62 at 1×–1000×, the last through the
-    * stored index at 2M vectors — SCALING.md r7 tables, DeepScaleProbe)
+    * stored index at 2M vectors — SCALING.md r7 tables, DeepScaleProbe
+    * at commit d988a61)
     * while the probed fraction still DECAYS
     * as 2/n^(1/4) (0.31 → 0.17 → 0.13 → 0.096): per-query candidate
     * volume n·nprobe/cells ≈ 2·n^(3/4) stays sub-linear, so the index

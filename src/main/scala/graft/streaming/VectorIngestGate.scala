@@ -67,8 +67,9 @@ object VectorIngestGate {
     * SCALING.md r7) with cell-boundary headroom beyond the argmin cell an
     * exact copy provably shares. The r7 A/B's arrivals were exact copies
     * and near-orthogonal scrambles only; the round-8 advisor follow-up
-    * (DupGateNearCopyProbe, SCALING.md r8) measured PERTURBED near-copies
-    * across the whole dup band — cos 0.9995 / 0.996 / 0.992 at 2M
+    * (DupGateNearCopyProbe at commit d988a61, SCALING.md r8) measured
+    * PERTURBED near-copies across the whole dup band — cos 0.9995 /
+    * 0.996 / 0.992 at 2M
     * vectors, 1,414 cells: dup recall 1.0000 and verdict agreement
     * 1.0000 with the rule at every band, at ~3–4× the throughput. The
     * fixed budget's geometric argument (a near-copy quantizes like its

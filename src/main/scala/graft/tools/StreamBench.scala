@@ -347,16 +347,15 @@ object StreamBench {
           f"(files=${graft.operators.IvfIndex.fileCount(spark, "sbvix")})")
         // complete cadence: census-gated retrain when the corpus outgrows
         // the model (the candidate-volume growth term — see SCALING.md)
-        println(s"[streambench] vecgate census $b: " +
-          s"n=${spark.table(graft.operators.IvfIndex.assignTable("sbvix")).count()} " +
-          s"model=${spark.table(graft.operators.IvfIndex.modelTable("sbvix")).count()} " +
-          s"auto=${graft.operators.Similarity.cellsFor(
-            spark.table(graft.operators.IvfIndex.assignTable("sbvix")).count())}")
+        def modelCells = graft.operators.IvfIndex.loadModel(spark, "sbvix").cents.length
+        val censusN = spark.table(graft.operators.IvfIndex.assignTable("sbvix")).count()
+        println(s"[streambench] vecgate census $b: n=$censusN model=$modelCells " +
+          s"auto=${graft.operators.Similarity.cellsFor(censusN)}")
         val tr = System.nanoTime()
         if (graft.operators.IvfIndex.rebuildIfNeeded(spark, "sbvix", s"$root/vindex"))
           println(f"[streambench] vecgate REBUILD after batch $b: " +
             f"${(System.nanoTime() - tr) / 1e9}%.2f s " +
-            s"(model=${spark.table(graft.operators.IvfIndex.modelTable("sbvix")).count()} cells)")
+            s"(model=$modelCells cells)")
       }
       val vLanded = spark.read.parquet(s"$root/vlanding").count()
       val vReceipts = spark.read.parquet(s"$root/vreceipts").count()

@@ -90,9 +90,9 @@ class ArgMaxBestSpec extends AnyFunSuite {
       assert(plan.contains("HashAggregate"), plan)
       assert(res.count() === 5L)
     } finally {
-      Seq(graft.operators.IvfIndex.modelTable(tag),
+      graft.operators.ModelStore.drop(spark, graft.operators.IvfIndex.storeName(tag))
+      graft.operators.BucketedMaintenance.dropWithFiles(spark,
         graft.operators.IvfIndex.assignTable(tag))
-        .foreach(t => graft.operators.BucketedMaintenance.dropWithFiles(spark, t))
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{IvfIndex, ShingleIndex, Similarity}
+import graft.operators.{IvfIndex, ModelStore, ShingleIndex, Similarity}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,8 +48,35 @@ class CrossSessionIndexSpec extends AnyFunSuite {
       val hit = IvfIndex.search(spark, "xivf", probe, nprobe = 8, k = 1).collect()
       assert(hit.length == 1 && hit(0).getLong(2) == 0L,
         s"appended vec 0 not found: ${hit.toSeq}")
-    } finally Seq(IvfIndex.modelTable("xivf"), IvfIndex.assignTable("xivf"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    } finally {
+      ModelStore.drop(spark, IvfIndex.storeName("xivf"))
+      spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.assignTable("xivf")}")
+    }
+  }
+
+  test("IvfIndex: a rebuild from another session is seen by the next search") {
+    val dir = Files.createTempDirectory("graft-xsess-rebuild").toString
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val q = emb.filter(col("vec_id") < 20)
+    try {
+      IvfIndex.build(emb, dir, "xreb", nCentroids = 8, seed = Similarity.ResidueSeed)
+      // prime THIS session's model cache and relation cache
+      assert(IvfIndex.search(spark, "xreb", q, nprobe = 1).count() > 0)
+      assert(IvfIndex.loadModel(spark, "xreb").cents.length == 8)
+      // a DIFFERENT session retrains (forced) under the auto cell rule
+      val other = spark.newSession()
+      assert(IvfIndex.rebuildIfNeeded(other, "xreb", dir, growthFactor = 0.0))
+      val cells = IvfIndex.loadModel(other, "xreb").cents.length
+      assert(cells != 8, s"forced rebuild kept $cells cells")
+      // the first session's next search ranks against the rebuilt model
+      assert(IvfIndex.loadModel(spark, "xreb").cents.length == cells)
+      val got = IvfIndex.search(spark, "xreb", q, nprobe = 1).collect().toSeq
+      val want = IvfIndex.search(other, "xreb", q, nprobe = 1).collect().toSeq
+      assert(got.nonEmpty && got == want)
+    } finally {
+      ModelStore.drop(spark, IvfIndex.storeName("xreb"))
+      spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.assignTable("xreb")}")
+    }
   }
 
   test("ShingleIndex: probe and census see another session's appends") {

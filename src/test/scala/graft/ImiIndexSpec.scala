@@ -18,9 +18,10 @@ class ImiIndexSpec extends AnyFunSuite {
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select("vec_id", "embedding")
 
-  private def drop(tag: String): Unit =
-    Seq(ImiIndex.modelTable(tag), ImiIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  private def drop(tag: String): Unit = {
+    graft.operators.ModelStore.drop(spark, ImiIndex.storeName(tag))
+    spark.sql(s"DROP TABLE IF EXISTS ${ImiIndex.assignTable(tag)}")
+  }
 
   test("stored search ≡ Imi.search, exactly (the q_imi_indexed contract)") {
     val dir = Files.createTempDirectory("graft-imiidx").toString
@@ -89,8 +90,7 @@ class ImiIndexSpec extends AnyFunSuite {
       val filesAfter = ImiIndex.fileCount(spark, "imxm")
       assert(filesAfter < filesBefore && filesAfter <= 8, s"$filesBefore -> $filesAfter")
       assert(ImiIndex.rebuildIfNeeded(spark, "imxm", dir))
-      val k1Now = spark.table(ImiIndex.modelTable("imxm"))
-        .filter(col("side") === "l").count()
+      val k1Now = ImiIndex.loadModel(spark, "imxm").cl.length
       assert(k1Now >= 4, s"rebuild kept k1=$k1Now")
       // the rebuilt index still answers: an exact copy of a stored vector
       val probe = emb.filter(col("vec_id") === 3)

@@ -115,40 +115,10 @@ class ImiRotationSpec extends AnyFunSuite {
       val again = ImiIndex.search(spark, tag, queries, nprobe = 4)
         .collect().map(_.toString).toSeq
       assert(again.nonEmpty)
-    } finally Seq(ImiIndex.modelTable(tag), ImiIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-  }
-
-  test("legacy seed TBLPROPERTY (pre-seed-row model tables) still rotates queries") {
-    import graft.operators.ImiIndex
-    import spark.implicits._
-    import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft-imileg").toString
-    val tag = "imileg"
-    try {
-      val base = emb.filter(col("vec_id") % 5 =!= 0)
-      ImiIndex.build(base, tmp, tag, k1 = 8, rotSeed = Imi.RotSeed)
-      val queries = emb.filter(col("vec_id") < 20)
-      val want = ImiIndex.search(spark, tag, queries, nprobe = 4)
-        .collect().map(_.toString).toSeq
-      // re-shape the model table to the round-8 disk contract: NO seed
-      // row, seed in the graft.imi.rot_seed TBLPROPERTY
-      val mt = ImiIndex.modelTable(tag)
-      val saved = spark.table(mt).filter(col("side") =!= "s")
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[Double](2)))
-      graft.operators.BucketedMaintenance.dropWithFiles(spark, mt)
-      saved.toSeq.toDF("side", "cid", "centroid")
-        .coalesce(1).write.option("path", s"$tmp/$mt-legacy").saveAsTable(mt)
-      spark.sql(s"ALTER TABLE `$mt` SET TBLPROPERTIES " +
-        s"('${ImiIndex.LegacyRotSeedProp}' = '${Imi.RotSeed}')")
-      // the fallback must read the legacy seed — an unrotated-looking
-      // read here would silently skip query rotation (advisor r9)
-      assert(ImiIndex.rotSeedOf(spark, tag) == Imi.RotSeed)
-      val got = ImiIndex.search(spark, tag, queries, nprobe = 4)
-        .collect().map(_.toString).toSeq
-      assert(got == want, "legacy-property index must search like the seed-row index")
-    } finally Seq(ImiIndex.modelTable(tag), ImiIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    } finally {
+      graft.operators.ModelStore.drop(spark, ImiIndex.storeName(tag))
+      spark.sql(s"DROP TABLE IF EXISTS ${ImiIndex.assignTable(tag)}")
+    }
   }
 
   test("uncorrelated corpus: rotated search recall matches unrotated") {

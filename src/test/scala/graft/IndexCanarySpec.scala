@@ -18,9 +18,10 @@ class IndexCanarySpec extends AnyFunSuite {
   private def docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     .select(col("doc_id"), col("text"))
 
-  private def dropIvf(tag: String): Unit =
-    Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  private def dropIvf(tag: String): Unit = {
+    graft.operators.ModelStore.drop(spark, IvfIndex.storeName(tag))
+    spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.assignTable(tag)}")
+  }
   private def dropShingle(tag: String): Unit =
     Seq(ShingleIndex.occTable(tag), ShingleIndex.sizesTable(tag),
       ShingleIndex.fpTable(tag), ShingleIndex.satTable(tag))
@@ -89,14 +90,15 @@ class IndexCanarySpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-canary-extra").toString
     try {
       IvfIndex.build(emb, dir, "cnex", nCentroids = 8, seed = Similarity.ResidueSeed)
-      val t = IvfIndex.modelTable("cnex")
+      val t = IvfIndex.assignTable("cnex")
       val widened = spark.table(t).withColumn("epoch", lit(1L)).collect().toSeq
       val schema = spark.table(t).schema
         .add(org.apache.spark.sql.types.StructField("epoch",
           org.apache.spark.sql.types.LongType))
       spark.sql(s"DROP TABLE $t")
+      // same bucket layout: the extra column is the ONLY drift
       spark.createDataFrame(spark.sparkContext.parallelize(widened), schema)
-        .write.format("parquet").saveAsTable(t)
+        .write.format("parquet").bucketBy(8, "cid").sortBy("cid").saveAsTable(t)
       IndexCanary.invalidate(t)
       val e = intercept[IllegalStateException] {
         IvfIndex.search(spark, "cnex", emb.filter(col("vec_id") < 5), nprobe = 2)

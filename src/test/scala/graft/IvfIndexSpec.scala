@@ -15,9 +15,10 @@ class IvfIndexSpec extends AnyFunSuite {
 
   private def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
-  private def drop(tag: String): Unit =
-    Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  private def drop(tag: String): Unit = {
+    graft.operators.ModelStore.drop(spark, IvfIndex.storeName(tag))
+    spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.assignTable(tag)}")
+  }
 
   test("build+search ≡ ivfSearch, exactly (oracle-parity config)") {
     val dir = Files.createTempDirectory("graft-ivfidx").toString
@@ -31,6 +32,27 @@ class IvfIndexSpec extends AnyFunSuite {
     } finally drop("ivx")
   }
 
+  test("index models are store generations, never catalog tables") {
+    import graft.operators.{Imi, ImiIndex, ModelStore, Pq}
+    val dir = Files.createTempDirectory("graft-ivfidx-cat").toString
+    try {
+      IvfIndex.build(emb, dir, "ivcat", nCentroids = 8, seed = Similarity.ResidueSeed,
+        pq = Pq.PqSpec(m = 4, k = 8))
+      ImiIndex.build(emb, dir, "imcat", k1 = 4, rotSeed = Imi.RotSeed)
+      val names = spark.catalog.listTables().collect().map(_.name).toSeq
+      val models = names.filter(n => Seq("_ivfmodel", "_pqmodel", "_imimodel").exists(n.endsWith))
+      assert(models.isEmpty, s"model tables in the catalog: $models")
+      assert(names.contains(IvfIndex.assignTable("ivcat")) &&
+        names.contains(ImiIndex.assignTable("imcat")), s"assignment tables missing: $names")
+      assert(ModelStore.generations(spark, IvfIndex.storeName("ivcat")).size == 1)
+      assert(ModelStore.generations(spark, ImiIndex.storeName("imcat")).size == 1)
+    } finally {
+      drop("ivcat")
+      ModelStore.drop(spark, ImiIndex.storeName("imcat"))
+      spark.sql(s"DROP TABLE IF EXISTS ${ImiIndex.assignTable("imcat")}")
+    }
+  }
+
   test("nprobeFor is the measured recall-floor rule; default search resolves it") {
     // pinned at the measured frontier cell counts (SCALING.md r7): the
     // ⌈2√cells⌉ band that held recall@5 ≥ 0.55 across 1×/10×/30×/100×
@@ -38,7 +60,7 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(Similarity.nprobeFor(142) == 24)
     assert(Similarity.nprobeFor(245) == 32)
     assert(Similarity.nprobeFor(448) == 43)
-    assert(Similarity.nprobeFor(1415) == 76, "the 1000×/2M-vector point (DeepScaleProbe)")
+    assert(Similarity.nprobeFor(1415) == 76, "the 1000×/2M-vector point (DeepScaleProbe, last at d988a61)")
     assert(Similarity.nprobeFor(10) == 8, "floor: small indexes probe ≥8")
     assert(Similarity.nprobeFor(4) == 4, "cap: never more cells than exist")
     assert(Similarity.nprobeFor(1 << 16) == 512, "at the broadcast cap: 512 of 65,536")
@@ -100,9 +122,7 @@ class IvfIndexSpec extends AnyFunSuite {
       val arrivals = emb.filter(col("vec_id") < 50)
       IvfIndex.assignInto(spark, "ivxa", arrivals)
       // every appended row's cell equals the model's nearestCell verdict
-      val cents = spark.table(IvfIndex.modelTable("ivxa"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-        .sortBy(_._1).map(_._2)
+      val cents = IvfIndex.loadModel(spark, "ivxa").cents
       val appended = spark.table(IvfIndex.assignTable("ivxa"))
         .join(arrivals.select("vec_id"), "vec_id")
         .select(col("vec_id"), col("cid"), col("embedding"))
@@ -143,7 +163,7 @@ class IvfIndexSpec extends AnyFunSuite {
       // index (post-compact — exercises the canonical-path re-pin) and the
       // refreshed model serves searches
       assert(IvfIndex.rebuildIfNeeded(spark, "ivxa", dir))
-      val cellsNow = spark.table(IvfIndex.modelTable("ivxa")).count()
+      val cellsNow = IvfIndex.loadModel(spark, "ivxa").cents.length
       assert(cellsNow > 8, s"model not retrained: $cellsNow cells")
       assert(spark.table(IvfIndex.assignTable("ivxa")).count() == preCount + 1)
       assert(IvfIndex.search(spark, "ivxa", q, nprobe = 4).count() > 0)

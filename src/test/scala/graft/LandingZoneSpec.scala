@@ -199,10 +199,10 @@ class LandingZoneSpec extends AnyFunSuite {
   private def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     .select(col("vec_id"), col("embedding"))
 
-  private def dropIvf(tag: String): Unit =
-    Seq(graft.operators.IvfIndex.modelTable(tag),
-      graft.operators.IvfIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  private def dropIvf(tag: String): Unit = {
+    graft.operators.ModelStore.drop(spark, graft.operators.IvfIndex.storeName(tag))
+    spark.sql(s"DROP TABLE IF EXISTS ${graft.operators.IvfIndex.assignTable(tag)}")
+  }
 
   test("vector landing: concurrent land -> absorb -> search ≡ direct assignInto") {
     import graft.operators.{IvfIndex, Similarity}
@@ -296,9 +296,10 @@ class LandingZoneSpec extends AnyFunSuite {
     val root = tmp("graft-imiland")
     val idxA = tmp("graft-imiland-idxa")
     val idxB = tmp("graft-imiland-idxb")
-    def dropImi(tag: String): Unit =
-      Seq(ImiIndex.modelTable(tag), ImiIndex.assignTable(tag))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    def dropImi(tag: String): Unit = {
+      graft.operators.ModelStore.drop(spark, ImiIndex.storeName(tag))
+      spark.sql(s"DROP TABLE IF EXISTS ${ImiIndex.assignTable(tag)}")
+    }
     try {
       val base = emb.filter(col("vec_id") % 3 =!= 0)
       val landed = emb.filter(col("vec_id") % 3 === 0)

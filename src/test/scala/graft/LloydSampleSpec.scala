@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{BucketedMaintenance, IvfIndex, Similarity}
+import graft.operators.{BucketedMaintenance, IvfIndex, ModelStore, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,14 +47,13 @@ class LloydSampleSpec extends AnyFunSuite {
 
   test("auto build is reproducible; explicit-cells build still trains on the full corpus") {
     val dir = java.nio.file.Files.createTempDirectory("graft-lloydsample").toString
-    def model(tag: String): Seq[(Int, Seq[Double])] = {
-      spark.table(IvfIndex.modelTable(tag))
-        .filter(col("cid") >= 0) // seed/meta rows out, centroid rows only
-        .collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
+    def model(tag: String): Seq[(Int, Seq[Double])] =
+      IvfIndex.loadModel(spark, tag).cents.toSeq.map(_.toSeq).zipWithIndex
+        .map { case (c, cid) => (cid, c) }
+    def drop(tag: String): Unit = {
+      ModelStore.drop(spark, IvfIndex.storeName(tag))
+      BucketedMaintenance.dropWithFiles(spark, IvfIndex.assignTable(tag))
     }
-    def drop(tag: String): Unit =
-      Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag))
-        .foreach(t => BucketedMaintenance.dropWithFiles(spark, t))
     try {
       // auto path: two builds → identical models (deterministic sample)
       IvfIndex.build(corpus, dir, "lls_auto1", buckets = 2)
@@ -78,13 +77,16 @@ class LloydSampleSpec extends AnyFunSuite {
   test("IMI auto build samples reproducibly; explicit-k1 build keeps full-corpus halves") {
     import graft.operators.{Imi, ImiIndex}
     val dir = java.nio.file.Files.createTempDirectory("graft-lloydimi").toString
-    def model(tag: String): Seq[(String, Int, Seq[Double])] =
-      spark.table(ImiIndex.modelTable(tag))
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getSeq[Double](2)))
-        .toSeq.sortBy(t => (t._1, t._2))
-    def drop(tag: String): Unit =
-      Seq(ImiIndex.modelTable(tag), ImiIndex.assignTable(tag))
-        .foreach(t => BucketedMaintenance.dropWithFiles(spark, t))
+    def model(tag: String): Seq[(String, Int, Seq[Double])] = {
+      val m = ImiIndex.loadModel(spark, tag)
+      def side(s: String, cs: Array[Array[Double]]) =
+        cs.toSeq.zipWithIndex.map { case (c, cid) => (s, cid, c.toSeq) }
+      side("l", m.cl) ++ side("r", m.cr)
+    }
+    def drop(tag: String): Unit = {
+      ModelStore.drop(spark, ImiIndex.storeName(tag))
+      BucketedMaintenance.dropWithFiles(spark, ImiIndex.assignTable(tag))
+    }
     try {
       // auto k1 at 20k rows: k1For(20000) ≈ 12 → cap 128·12 ≪ n → sampled
       ImiIndex.build(corpus, dir, "lls_imi1", buckets = 2)
@@ -106,9 +108,10 @@ class LloydSampleSpec extends AnyFunSuite {
   test("sample-trained auto index keeps rule-budget recall vs full-corpus training") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-lloydrecall").toString
-    def drop(tag: String): Unit =
-      Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag))
-        .foreach(t => BucketedMaintenance.dropWithFiles(spark, t))
+    def drop(tag: String): Unit = {
+      ModelStore.drop(spark, IvfIndex.storeName(tag))
+      BucketedMaintenance.dropWithFiles(spark, IvfIndex.assignTable(tag))
+    }
     try {
       val queries = corpus.filter(col("vec_id") % 400 === 0) // 50 queries
       // exact top-5 (excluding self) by brute force on the driver
@@ -121,8 +124,7 @@ class LloydSampleSpec extends AnyFunSuite {
           .sortBy { case (id, c) => (-c, id) }.take(5).map(_._1).toSet
       }.toMap
       IvfIndex.build(corpus, dir, "lls_rec", buckets = 2) // auto: sampled training
-      val cells = spark.table(IvfIndex.modelTable("lls_rec"))
-        .filter(col("cid") >= 0).count().toInt
+      val cells = IvfIndex.loadModel(spark, "lls_rec").cents.length
       val got = IvfIndex.search(spark, "lls_rec", queries,
           nprobe = Similarity.nprobeFor(cells), k = 5)
         .select("query_id", "neighbor_id").collect()

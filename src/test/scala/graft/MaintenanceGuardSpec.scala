@@ -23,9 +23,10 @@ class MaintenanceGuardSpec extends AnyFunSuite {
       ShingleIndex.fpTable(tag), ShingleIndex.satTable(tag))
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
-  private def dropIvf(tag: String): Unit =
-    Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  private def dropIvf(tag: String): Unit = {
+    graft.operators.ModelStore.drop(spark, IvfIndex.storeName(tag))
+    spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.assignTable(tag)}")
+  }
 
   private def canon(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(v => if (v == null) "∅" else v.toString).mkString("|"))

@@ -145,8 +145,10 @@ class MultiWriterStressSpec extends AnyFunSuite {
       // search still answers over the merged state
       assert(IvfIndex.search(spark, tag,
         emb.filter(col("vec_id") < 5)).count() > 0)
-    } finally Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    } finally {
+      graft.operators.ModelStore.drop(spark, IvfIndex.storeName(tag))
+      spark.sql(s"DROP TABLE IF EXISTS `${IvfIndex.assignTable(tag)}`")
+    }
   }
 
   test("CONCURRENT appenders + compactor, lease-serialized: zero failures, zero loss, zero duplicates") {

@@ -16,9 +16,10 @@ class PqIndexSpec extends AnyFunSuite {
 
   private def emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
-  private def drop(tag: String): Unit =
-    Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag), IvfIndex.pqModelTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  private def drop(tag: String): Unit = {
+    graft.operators.ModelStore.drop(spark, IvfIndex.storeName(tag))
+    spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.assignTable(tag)}")
+  }
 
   private val spec = Pq.PqSpec(m = 4, k = 8)
 
@@ -50,11 +51,8 @@ class PqIndexSpec extends AnyFunSuite {
         nprobe = 2).collect()
       assert(got.nonEmpty)
       // rebuild the books + signs exactly as search loads them
-      val rows = spark.table(IvfIndex.pqModelTable("pqs"))
-        .select("m", "cid", "centroid", "rot_seed").collect()
-      val books = Array.ofDim[Array[Double]](spec.m, spec.k)
-      rows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-      val signs = Some(graft.operators.Imi.rotSigns(rows.head.getLong(3)))
+      val pm = IvfIndex.loadModel(spark, "pqs").pq.get
+      val (books, signs) = (pm.books, pm.signs)
       val vecs = emb.select("vec_id", "embedding").as[(Long, Array[Float])]
         .collect().toMap
       got.foreach { r =>
@@ -80,12 +78,9 @@ class PqIndexSpec extends AnyFunSuite {
       val got = IvfIndex.searchPq(spark, "pq16", emb.filter(col("vec_id") < 8),
         nprobe = 2).collect()
       assert(got.nonEmpty)
-      val rows = spark.table(IvfIndex.pqModelTable("pq16"))
-        .select("m", "cid", "centroid", "rot_seed").collect()
-      assert(rows.length == 16 * 8, "16 subspaces × 8 centroids stored")
-      val books = Array.ofDim[Array[Double]](sp16.m, sp16.k)
-      rows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-      val signs = Some(graft.operators.Imi.rotSigns(rows.head.getLong(3)))
+      val pm = IvfIndex.loadModel(spark, "pq16").pq.get
+      assert(pm.books.map(_.length).sum == 16 * 8, "16 subspaces × 8 centroids stored")
+      val (books, signs) = (pm.books, pm.signs)
       val vecs = emb.select("vec_id", "embedding").as[(Long, Array[Float])]
         .collect().toMap
       got.foreach { r =>
@@ -106,20 +101,13 @@ class PqIndexSpec extends AnyFunSuite {
     try {
       IvfIndex.build(emb, dir, "pqres", nCentroids = 8,
         seed = Similarity.ResidueSeed, pq = spR)
-      // the model table carries the flag — a reader can tell the tiers apart
-      val mrows = spark.table(IvfIndex.pqModelTable("pqres"))
-        .select("m", "cid", "centroid", "rot_seed", "residual").collect()
-      assert(mrows.forall(_.getBoolean(4)), "residual flag not stored")
+      // the model generation carries the flag — a reader can tell the tiers apart
+      val model = IvfIndex.loadModel(spark, "pqres")
+      assert(model.pq.get.residual, "residual flag not stored")
       val got = IvfIndex.searchPq(spark, "pqres", emb.filter(col("vec_id") < 10),
         nprobe = 2).collect()
       assert(got.nonEmpty)
-      val books = Array.ofDim[Array[Double]](spR.m, spR.k)
-      mrows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-      val signs = Some(graft.operators.Imi.rotSigns(mrows.head.getLong(3)))
-      val crows = spark.table(IvfIndex.modelTable("pqres"))
-        .select("cid", "centroid").collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-      val cents = Array.tabulate(crows.size)(crows(_))
+      val (books, signs, cents) = (model.pq.get.books, model.pq.get.signs, model.cents)
       val vecs = emb.select("vec_id", "embedding").as[(Long, Array[Float])]
         .collect().toMap
       got.foreach { r =>
@@ -146,15 +134,8 @@ class PqIndexSpec extends AnyFunSuite {
       val arrivals = emb.filter(col("vec_id") < 40)
       IvfIndex.assignInto(spark, "pqresrr", arrivals)
       // appended rows carry residual codes computed with the STORED models
-      val mrows = spark.table(IvfIndex.pqModelTable("pqresrr"))
-        .select("m", "cid", "centroid", "rot_seed").collect()
-      val books = Array.ofDim[Array[Double]](spR.m, spR.k)
-      mrows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-      val signs = Some(graft.operators.Imi.rotSigns(mrows.head.getLong(3)))
-      val crows = spark.table(IvfIndex.modelTable("pqresrr"))
-        .select("cid", "centroid").collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-      val cents = Array.tabulate(crows.size)(crows(_))
+      val model = IvfIndex.loadModel(spark, "pqresrr")
+      val (books, signs, cents) = (model.pq.get.books, model.pq.get.signs, model.cents)
       val appended = spark.table(IvfIndex.assignTable("pqresrr"))
         .join(arrivals.select("vec_id"), "vec_id")
         .select(col("vec_id"), col("pqcode"), col("embedding"))
@@ -196,15 +177,8 @@ class PqIndexSpec extends AnyFunSuite {
         s"best-rescored path went through a window:\n$plan")
       // driver replica: full ADC scoring of the probed cells, arg-max
       // with the pinned (score DESC, id ASC) tie-break, float re-score
-      val mrows = spark.table(IvfIndex.pqModelTable("pqbest"))
-        .select("m", "cid", "centroid", "rot_seed").collect()
-      val books = Array.ofDim[Array[Double]](spR.m, spR.k)
-      mrows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-      val signs = Some(graft.operators.Imi.rotSigns(mrows.head.getLong(3)))
-      val crows = spark.table(IvfIndex.modelTable("pqbest"))
-        .select("cid", "centroid").collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-      val cents = Array.tabulate(crows.size)(crows(_))
+      val model = IvfIndex.loadModel(spark, "pqbest")
+      val (books, signs, cents) = (model.pq.get.books, model.pq.get.signs, model.cents)
       val vecs = emb.select("vec_id", "embedding").as[(Long, Array[Float])]
         .collect().sortBy(_._1)
       val byId = vecs.toMap
@@ -309,13 +283,34 @@ class PqIndexSpec extends AnyFunSuite {
     try {
       // 500 rows < AutoMinRows → auto resolves to no tier
       IvfIndex.build(emb, dir, "pqa", nCentroids = 8, seed = Similarity.ResidueSeed)
-      assert(!spark.catalog.tableExists(IvfIndex.pqModelTable("pqa")),
+      assert(IvfIndex.loadModel(spark, "pqa").pq.isEmpty,
         "PqAuto trained a tier below the scale floor")
       val e = intercept[IllegalArgumentException] {
         IvfIndex.searchPq(spark, "pqa", emb.filter(col("vec_id") < 3))
       }
       assert(e.getMessage.contains("no PQ tier"), e.getMessage)
     } finally drop("pqa")
+  }
+
+  test("a rebuild without the tier leaves no codebook: searchPq fails, never stale") {
+    val dir = Files.createTempDirectory("graft-pq-off").toString
+    val q = emb.filter(col("vec_id") < 5)
+    try {
+      IvfIndex.build(emb, dir, "pqoff", nCentroids = 8,
+        seed = Similarity.ResidueSeed, pq = spec)
+      assert(IvfIndex.searchPq(spark, "pqoff", q, nprobe = 2).count() > 0)
+      IvfIndex.build(emb, dir, "pqoff", nCentroids = 8,
+        seed = Similarity.ResidueSeed, pq = Pq.PqOff)
+      val g = graft.operators.ModelStore.current(spark, IvfIndex.storeName("pqoff"))
+      val part = new org.apache.hadoop.fs.Path(g.partPath("pq"))
+      assert(!part.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(part),
+        s"tierless generation ${g.id} carries a pq part")
+      assert(IvfIndex.loadModel(spark, "pqoff").pq.isEmpty)
+      val e = intercept[IllegalArgumentException] {
+        IvfIndex.searchPq(spark, "pqoff", q, nprobe = 2)
+      }
+      assert(e.getMessage.contains("no PQ tier"), e.getMessage)
+    } finally drop("pqoff")
   }
 
   test("assignInto encodes appended vectors with the STORED codebooks") {
@@ -326,11 +321,8 @@ class PqIndexSpec extends AnyFunSuite {
         nCentroids = 8, seed = Similarity.ResidueSeed, pq = spec)
       val arrivals = emb.filter(col("vec_id") < 50)
       IvfIndex.assignInto(spark, "pqap", arrivals)
-      val rows = spark.table(IvfIndex.pqModelTable("pqap"))
-        .select("m", "cid", "centroid", "rot_seed").collect()
-      val books = Array.ofDim[Array[Double]](spec.m, spec.k)
-      rows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
-      val signs = Some(graft.operators.Imi.rotSigns(rows.head.getLong(3)))
+      val pm = IvfIndex.loadModel(spark, "pqap").pq.get
+      val (books, signs) = (pm.books, pm.signs)
       val appended = spark.table(IvfIndex.assignTable("pqap"))
         .join(arrivals.select("vec_id"), "vec_id")
         .select(col("vec_id"), col("pqcode"), col("embedding"))

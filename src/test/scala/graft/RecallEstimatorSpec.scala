@@ -9,7 +9,7 @@ import java.nio.file.Files
 /** The planted-panel recall estimator must agree with exact brute-force
   * ground truth wherever both are computable — that equivalence is what
   * licenses its use past the exact-baseline cap (DeepScaleProbe `plant`
-  * tier at 5M/10M/20M vectors). */
+  * tier at 5M/10M/20M vectors, last at commit d988a61). */
 class RecallEstimatorSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -57,8 +57,10 @@ class RecallEstimatorSpec extends AnyFunSuite {
       assert(recallExact == recallPlanted,
         s"exact $recallExact vs planted $recallPlanted")
       assert(recallPlanted >= 0.0 && recallPlanted <= 1.0)
-    } finally Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    } finally {
+      graft.operators.ModelStore.drop(spark, IvfIndex.storeName(tag))
+      spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.assignTable(tag)}")
+    }
   }
 
   test("synthetic queries keep the ceiling flat under block replication") {

@@ -17,9 +17,10 @@ class SemanticDedupSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
   private def emb = spark.read.parquet(s"$dir/embeddings.parquet")
 
-  private def drop(tag: String): Unit =
-    Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  private def drop(tag: String): Unit = {
+    graft.operators.ModelStore.drop(spark, IvfIndex.storeName(tag))
+    spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.assignTable(tag)}")
+  }
 
   test("verdicts agree with an independent brute-force within-cell check") {
     val got = Dedup.semanticDedup(spark, dir, nCentroids = 8, threshold = 0.45)
@@ -108,8 +109,10 @@ class SemanticDedupSpec extends AnyFunSuite {
       assert(!plan.contains("Exchange hashpartitioning(cid"),
         s"IMI pair join shuffled on cid:\n$plan")
       assert(Sim.Dim == 64) // the halves the oracle offsets depend on
-    } finally Seq(ImiIndex.modelTable("sddi"), ImiIndex.assignTable("sddi"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    } finally {
+      graft.operators.ModelStore.drop(spark, ImiIndex.storeName("sddi"))
+      spark.sql(s"DROP TABLE IF EXISTS ${ImiIndex.assignTable("sddi")}")
+    }
   }
 
   test("3-chain pins chain-pruning: dup_of may itself be dropped (not a τ-cover)") {

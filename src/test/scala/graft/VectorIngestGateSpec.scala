@@ -16,9 +16,10 @@ import java.nio.file.Files
 class VectorIngestGateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def drop(tag: String): Unit =
-    Seq(IvfIndex.modelTable(tag), IvfIndex.assignTable(tag), IvfIndex.pqModelTable(tag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  private def drop(tag: String): Unit = {
+    graft.operators.ModelStore.drop(spark, IvfIndex.storeName(tag))
+    spark.sql(s"DROP TABLE IF EXISTS ${IvfIndex.assignTable(tag)}")
+  }
 
   test("gate drops exact dups, admits fresh, and the index is the cross-batch ledger") {
     import spark.implicits._
